@@ -10,6 +10,7 @@ never a single bit of any value that reaches a query result.
 import random
 import struct
 
+import pytest
 from pyspark.sql import functions as F
 
 from tsod_spark.util import (
@@ -125,3 +126,8 @@ def test_fallbacks_preserve_reference_path(spark):
         lit_map_int_double2d([(1, [[1.5]]), (2, [])]).alias("m")
     ).first()
     assert list(row["m"][2]) == [] and row["m"][1][0][0] == 1.5
+
+
+def test_lit_map_int_double2d_rejects_duplicate_keys():
+    with pytest.raises(ValueError, match=r"duplicate map keys \[5\]"):
+        lit_map_int_double2d([(5, [[1.0]]), (2, [[2.0]]), (5, [[3.0]])])

@@ -45,6 +45,23 @@ def test_text_stats(spark, docs):
         assert 0 <= r.quality_score <= 1
 
 
+def test_text_stats_rounds_half_away_like_the_oracle(spark):
+    """366 chars, 64 tokens, 45 distinct (the shape of doc 613 of the
+    perfbench corpus on seed 2): quality_score = 0.732 * 45/64 is the
+    double just below 0.5146875. DuckDB's round(x, 6) gives 0.514687;
+    F.round (HALF_UP on the shortest repr "0.5146875") gave 0.514688."""
+    words = [f"w{i:02d}" for i in range(45)] + ["w00"] * 19
+    words[44] += "x" * 111
+    df = spark.createDataFrame([(1, " ".join(words))], "doc_id long, text string")
+    r = text.text_stats(df).collect()[0]
+    assert (r.n_chars, r.n_words, r.n_uniq_words) == (366, 64, 45)
+    assert r.type_token_ratio == 0.703125
+    assert r.mean_word_len == 4.734375
+    assert r.quality_score == 0.514687
+    duckdb = pytest.importorskip("duckdb")
+    assert duckdb.sql("SELECT round(least(366 / 500.0, 1.0) * (45 / 64), 6)").fetchone()[0] == 0.514687
+
+
 def test_shingles(spark):
     df = spark.createDataFrame([("a b c d",), ("x y",), ("q",)], "text string")
     out = df.select(

@@ -6,6 +6,7 @@ large-scale data-pipeline operators (dedup, similarity search, text
 analysis, multimodal plumbing) a 100 TB training-data pipeline needs.
 """
 
+from . import _zipimport
 from .detectors import (
     CombinedDetector,
     ConstantGradientDetector,
@@ -32,6 +33,10 @@ from .pandas_api import PandasDetectorAdapter
 from .persistence import load, save
 
 __version__ = "0.1.0"
+
+# Python workers import this package when they unpickle an engine UDF;
+# from then on their per-task import-cache reset skips unchanged zips.
+_zipimport.install()
 
 __all__ = [
     "TimeSeriesFrame",

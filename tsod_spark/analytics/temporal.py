@@ -31,7 +31,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..util import default_parallelism
+from ..util import default_parallelism, lit_int_array, round_half_away6
 
 
 def asof_join(
@@ -1302,8 +1302,6 @@ def lagged_cross_correlation(
     # series-x-buckets-sized — cheap to pin; plan-asserted in tests)
     per = per.where(F.col("__x").isNotNull()).localCheckpoint(eager=False)
     glob = per.groupBy("__b").agg(F.sum("__x").alias("__y"))
-    from ..util import lit_int_array
-
     lags = lit_int_array(range(-max_lag, max_lag + 1))
     e = per.select(
         *keys, "__b", "__x", F.explode(lags).alias("lag")
@@ -1378,8 +1376,6 @@ def changepoint_mean_shift(
     g = p.where(F.col("__k") < F.col("__n")).withColumn(
         "__g", F.abs(F.col("__n") * F.col("__sk") - F.col("__k") * F.col("__sn"))
     )
-    from ..util import round_half_away6
-
     r = g.withColumn(
         "__rn",
         F.row_number().over(
@@ -1427,8 +1423,6 @@ def changepoint_binseg(
     Emits (series, level, seg_lo, seg_hi, cp_ts, k_pre, gstat,
     pre_mean, post_mean) with k positions GLOBAL to the series.
     """
-    from ..util import round_half_away6
-
     sl = [F.col(c) for c in series]
     order = [F.col(ts_col), *[F.col(c) for c in tiebreak]]
     v = F.col(value_col)

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..features import create_dataset
+from ..util import lit_double_array2d
 from .base import SparkDetector, as_tsf
 
 
@@ -365,8 +366,6 @@ class KMeansDistanceDetector(SparkDetector):
         return self
 
     def _distance_col(self):
-        from ..util import lit_double_array2d
-
         centers_arr = lit_double_array2d(self._centers)
         vec = F.col("features")
         d2 = F.transform(

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..util import default_parallelism
+from ..util import default_parallelism, round_half_away6
 
 # Deterministic marker vocabularies for the n-gram/stopword language
 # heuristic. Order matters: ties resolve to the earlier language.
@@ -145,11 +145,11 @@ def text_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
         "n_chars",
         n_words.cast("long").alias("n_words"),
         n_uniq.cast("long").alias("n_uniq_words"),
-        F.round(n_uniq / n_words, 6).alias("type_token_ratio"),
-        F.round(total_len / n_words, 6).alias("mean_word_len"),
+        round_half_away6(n_uniq / n_words).alias("type_token_ratio"),
+        round_half_away6(total_len / n_words).alias("mean_word_len"),
         # crude quality: long-enough docs with diverse vocab score higher
-        F.round(
-            F.least(F.col("n_chars") / F.lit(500.0), F.lit(1.0)) * (n_uniq / n_words), 6
+        round_half_away6(
+            F.least(F.col("n_chars") / F.lit(500.0), F.lit(1.0)) * (n_uniq / n_words)
         ).alias("quality_score"),
     )
 

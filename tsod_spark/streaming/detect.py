@@ -61,6 +61,7 @@ from ..detectors import (
     RangeDetector,
     RollingStandardDeviationDetector,
 )
+from ..util import lit_double_array2d
 from . import kernels
 
 
@@ -376,6 +377,9 @@ def stream_detect(
     kernel, lookback, lookahead, make_kwargs, params_dfs = _plan(detector)
     keep = lookback + lookahead
     series = list(series)
+    # Only these columns reach the state operator: keep the rest of the
+    # event row out of the keyed shuffle and the Arrow hop.
+    stream_df = stream_df.select(*dict.fromkeys([*series, ts_col, value_col]))
 
     param_cols: list[str] = []
     if params_dfs:
@@ -1164,8 +1168,6 @@ def stream_ivfpq_search(
     m, _, dsub = bks.shape
 
     # --- 1. probe routing (stateless Column algebra) ---
-    from ..util import lit_double_array2d
-
     cents = lit_double_array2d(centroids)
     v = F.col(vec_col)
     d2s = F.transform(

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import math
 import threading
 import weakref
 from contextlib import contextmanager
@@ -198,21 +199,17 @@ def default_parallelism(spark: SparkSession) -> int:
 # Spark's SQL parser converts double literals with correctly-rounded
 # decimal->binary semantics (Java Double.parseDouble), so
 # parse(repr(v) + "D") == v bit-for-bit (pinned in
-# tests/test_opt_round15.py against the py4j construction). Non-finite
+# tests/test_opt_round15b.py against the py4j construction). Non-finite
 # values or empty input fall back to the per-element path, whose
 # behavior is the reference.
 # ---------------------------------------------------------------------------
-
-
-def _finite(v: float) -> bool:
-    return v == v and v not in (float("inf"), float("-inf"))
 
 
 def lit_double_array(values) -> Column:
     """``array<double>`` literal of ``values`` in ONE py4j round-trip;
     bit-identical to ``F.array(*[F.lit(float(v)) for v in values])``."""
     vals = [float(v) for v in values]
-    if not vals or not all(_finite(v) for v in vals):
+    if not vals or not all(math.isfinite(v) for v in vals):
         return F.array(*[F.lit(v) for v in vals])
     return F.expr("array(" + ",".join(repr(v) + "D" for v in vals) + ")")
 
@@ -221,7 +218,7 @@ def lit_double_array2d(rows) -> Column:
     """``array<array<double>>`` literal in ONE py4j round-trip;
     bit-identical to the nested ``F.array``/``F.lit`` construction."""
     mat = [[float(v) for v in row] for row in rows]
-    if not mat or not all(row and all(_finite(v) for v in row) for row in mat):
+    if not mat or not all(row and all(math.isfinite(v) for v in row) for row in mat):
         return F.array(*[F.array(*[F.lit(v) for v in row]) for row in mat])
     return F.expr(
         "array("
@@ -247,14 +244,20 @@ def lit_map_int_double2d(items) -> Column:
     in ONE py4j round-trip; bit-identical to interleaved
     ``F.create_map(F.lit(key), F.array(...), ...)`` construction.
     ``items`` is an iterable of ``(key, rows)`` pairs; insertion order
-    is preserved exactly as create_map's argument order."""
+    is preserved exactly as create_map's argument order. Duplicate
+    keys raise ``ValueError`` here rather than Spark's map-key error at
+    execution."""
     pairs = [(int(k), [[float(v) for v in row] for row in rows])
              for k, rows in items]
+    keys = [k for k, _ in pairs]
+    if len(set(keys)) != len(keys):
+        dup = sorted({k for k in keys if keys.count(k) > 1})
+        raise ValueError(f"lit_map_int_double2d: duplicate map keys {dup}")
     flat = [v for _, rows in pairs for row in rows for v in row]
     ragged = any(
         not rows or any(not row for row in rows) for _, rows in pairs
     )
-    if not pairs or ragged or not all(_finite(v) for v in flat):
+    if not pairs or ragged or not all(math.isfinite(v) for v in flat):
         out = []
         for k, rows in pairs:
             out.append(F.lit(k))
