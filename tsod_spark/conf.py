@@ -19,7 +19,9 @@ Rationale per knob (all measured/derived, not folklore):
   micro-batch, AQE does not coalesce them, and the checkpoint freezes
   the count, so size it for the stream when the query first starts
   (12 → 4 state partitions took ``stream_monitor``'s median batch
-  from ~2.2 s to 1.3-1.5 s on 4 vCPUs).
+  from ~2.2 s to 1.3-1.5 s on 4 vCPUs). Every stateful operator goes
+  through ``tsod_spark.streaming._fold.keyed_fold``, so a
+  state-partition policy belongs there, not in this dict.
 - **Python-worker import caches**: on CPython < 3.13 every Python task
   re-read ``pyspark.zip`` once per cached zip importer (~170 ms of
   CPU a task); importing ``tsod_spark`` makes workers skip archives

@@ -38,8 +38,10 @@ from __future__ import annotations
 
 from typing import Iterator, Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
@@ -63,6 +65,7 @@ from ..detectors import (
 )
 from ..util import lit_double_array2d
 from . import kernels
+from ._fold import keyed_fold, micros
 
 
 def stream_detect_stateless(detector: RangeDetector, stream_df: DataFrame, **tsf_kwargs) -> DataFrame:
@@ -87,8 +90,6 @@ def _leaf_plan(detector, kernel, lookback, lookahead, scalars, fit_map):
     )
 
     def make_kwargs(row):
-        import numpy as np
-
         kw = dict(scalars)
         if row is not None:
             for k, c in param_cols.items():
@@ -286,8 +287,6 @@ def _plan(detector):
         lookahead = max(p[2] for p in plans)
 
         def combined_kernel(ts, value, offset, resolved=None, plans=plans):
-            import numpy as np
-
             out = np.zeros(len(value), dtype=bool)
             for (kern, _, _, mk, _), kw in zip(plans, resolved):
                 out |= kern(ts, value, offset, **kw)
@@ -321,8 +320,6 @@ def stream_rollup(
     length. The mean uses the exact-cents trick so a replayed batch
     gives bit-identical averages.
     """
-    from pyspark.sql import functions as F
-
     v = F.when(F.isnan(value_col) | F.col(value_col).isNull(), None).otherwise(
         F.col(value_col)
     )
@@ -367,13 +364,10 @@ def stream_detect(
     from the fit fall back to the constructor scalars.
 
     ``idle_timeout`` (e.g. ``"1 hour"``) evicts the state of series
-    that stop sending — without it, per-key tail buffers survive
-    forever and unbounded/churning key cardinality grows state without
-    bound (each buffer is O(lookback+lookahead), but the KEY COUNT is
-    what needs a bound on a 100 TB stream).
+    that stop sending (the :mod:`~tsod_spark.streaming._fold`
+    contract): each tail buffer is O(lookback+lookahead), but the KEY
+    COUNT is what needs a bound on a 100 TB stream.
     """
-    from pyspark.sql import functions as F
-
     kernel, lookback, lookahead, make_kwargs, params_dfs = _plan(detector)
     keep = lookback + lookahead
     series = list(series)
@@ -387,53 +381,22 @@ def stream_detect(
             stream_df = stream_df.join(F.broadcast(pdf_small), on=series, how="left")
             param_cols.extend(c for c in pdf_small.columns if c not in series)
 
-    key_fields = [stream_df.schema[c] for c in series]
-    out_schema = StructType(
-        key_fields
-        + [
-            StructField("ts", stream_df.schema[ts_col].dataType),
-            StructField("value", DoubleType()),
-            StructField("is_anomaly", BooleanType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("seen", LongType()),
-            StructField("emitted", LongType()),
-            StructField("tail_ts", ArrayType(LongType())),  # micros
-            StructField("tail_vals", ArrayType(DoubleType())),
-        ]
-    )
-
-    def process(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        new = new.sort_values(ts_col, kind="mergesort")
+    def fold(key, new, st):
         params = make_kwargs(new.iloc[0].to_dict() if param_cols else None)
+        seen, emitted, tail_ts, tail_vals = st
+        tail_ts, tail_vals = list(tail_ts), list(tail_vals)
 
-        if state.exists:
-            seen, emitted, tail_ts, tail_vals = state.get
-            tail_ts, tail_vals = list(tail_ts), list(tail_vals)
-        else:
-            seen, emitted, tail_ts, tail_vals = 0, 0, [], []
-
-        new_ts = pd.to_datetime(new[ts_col]).astype("int64") // 1000  # micros
+        new_ts = micros(new[ts_col])
         # Drop rows at or before the buffered cursor: a row older than
         # the tail would land before already-emitted positions and
-        # corrupt the sorted-buffer invariant (documented contract —
-        # bound disorder upstream with withWatermark).
+        # corrupt the sorted-buffer invariant. The tail is the cursor
+        # here, so this fold keeps its own (see ``_fold``).
         if tail_ts:
             ok = new_ts > tail_ts[-1]
             if not ok.all():
                 new, new_ts = new[ok.to_numpy()], new_ts[ok]
             if len(new) == 0:
-                if idle_timeout is not None:
-                    state.setTimeoutDuration(idle_timeout)
-                return
+                return None, None
         new_vals = new[value_col].astype(float)
 
         buf_ts = pd.Series(tail_ts + new_ts.tolist(), dtype="int64")
@@ -449,44 +412,39 @@ def stream_detect(
         if emit_hi > emitted:
             lo_pos = emitted - buf_offset
             hi_pos = emit_hi - buf_offset
-            out = pd.DataFrame(
-                {
-                    **{c: key[i] for i, c in enumerate(series)},
-                    "ts": pd.to_datetime(buf_ts.iloc[lo_pos:hi_pos], unit="us"),
-                    "value": buf_vals.iloc[lo_pos:hi_pos].to_numpy(),
-                    "is_anomaly": flags[lo_pos:hi_pos],
-                }
-            )
+            out = {
+                "ts": pd.to_datetime(buf_ts.iloc[lo_pos:hi_pos], unit="us"),
+                "value": buf_vals.iloc[lo_pos:hi_pos].to_numpy(),
+                "is_anomaly": flags[lo_pos:hi_pos],
+            }
             emitted = emit_hi
         else:
             out = None
+        return (
+            new_seen,
+            emitted,
+            buf_ts.iloc[len(buf_ts) - min(keep, len(buf_ts)) :].tolist(),
+            buf_vals.iloc[len(buf_vals) - min(keep, len(buf_vals)) :].tolist(),
+        ), out
 
-        state.update(
-            (
-                new_seen,
-                emitted,
-                buf_ts.iloc[len(buf_ts) - min(keep, len(buf_ts)) :].tolist(),
-                buf_vals.iloc[len(buf_vals) - min(keep, len(buf_vals)) :].tolist(),
-            )
-        )
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
-        if out is not None and len(out):
-            yield out
-
-    return (
-        stream_df.groupBy(*series)
-        .applyInPandasWithState(
-            process,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if idle_timeout is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    return keyed_fold(
+        stream_df,
+        series,
+        [
+            StructField("seen", LongType()),
+            StructField("emitted", LongType()),
+            StructField("tail_ts", ArrayType(LongType())),  # micros
+            StructField("tail_vals", ArrayType(DoubleType())),
+        ],
+        [
+            StructField("ts", stream_df.schema[ts_col].dataType),
+            StructField("value", DoubleType()),
+            StructField("is_anomaly", BooleanType()),
+        ],
+        fold,
+        init=(0, 0, (), ()),
+        order=ts_col,
+        idle_timeout=idle_timeout,
     )
 
 
@@ -507,8 +465,6 @@ def stream_sessionize(
     query (identical partition of events into sessions; a session is
     emitted only when the watermark guarantees no more members).
     """
-    from pyspark.sql import functions as F
-
     return (
         stream_df.withWatermark(ts_col, watermark)
         .groupBy(*keys, F.session_window(ts_col, gap).alias("w"))
@@ -519,6 +475,46 @@ def stream_sessionize(
             F.col("w.end").alias("session_end"),
             "n_events",
         )
+    )
+
+
+def _first_arrival(df, keys, item, first_col, idle_timeout):
+    """Online first-arrival screen shared by the document dedup twins.
+
+    State per key is the FIRST ``doc_id`` seen (rows fold in
+    ``doc_id`` order); every later arrival on the key emits
+    ``(doc_id, item, first_col)`` naming it.
+    """
+
+    def fold(key, new, st):
+        (first_doc,) = st
+        upd = None
+        if first_doc is None:
+            first_doc = int(new["doc_id"].iloc[0])
+            upd = (first_doc,)
+        hits = new[new["doc_id"] != first_doc]
+        if not len(hits):
+            return upd, None
+        return upd, {
+            "doc_id": hits["doc_id"].astype("int64"),
+            item: hits[item].astype("int64"),
+            first_col: first_doc,
+        }
+
+    return keyed_fold(
+        df,
+        keys,
+        [StructField("first_doc", LongType())],
+        [
+            StructField("doc_id", LongType()),
+            StructField(item, LongType()),
+            StructField(first_col, LongType()),
+        ],
+        fold,
+        init=(None,),
+        order="doc_id",
+        idle_timeout=idle_timeout,
+        emit_keys=False,
     )
 
 
@@ -546,8 +542,6 @@ def stream_dedup_minhash(
     bucket-count growth on unbounded streams. Aggregate per doc
     downstream (any collision in >= 1 band => near-dup).
     """
-    from pyspark.sql import functions as F
-
     from ..pipeline.dedup import minhash_signatures_rowwise
 
     # per-row signatures: stateless and shuffle-free, which is what a
@@ -572,51 +566,7 @@ def stream_dedup_minhash(
         "doc_id", F.explode(F.array(*band_cols)).alias("bk")
     ).select("doc_id", "bk.band", "bk.key").where(F.col("key").isNotNull())
 
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("band", LongType()),
-            StructField("dup_of", LongType()),
-        ]
-    )
-    state_schema = StructType([StructField("first_doc", LongType())])
-
-    def process(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        new = new.sort_values("doc_id", kind="mergesort")
-        if state.exists:
-            (first_doc,) = state.get
-        else:
-            first_doc = int(new["doc_id"].iloc[0])
-            state.update((first_doc,))
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
-        dups = new[new["doc_id"] != first_doc]
-        if len(dups):
-            yield pd.DataFrame(
-                {
-                    "doc_id": dups["doc_id"].astype("int64"),
-                    "band": dups["band"].astype("int64"),
-                    "dup_of": first_doc,
-                }
-            )
-
-    return exploded.groupBy("band", "key").applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
+    return _first_arrival(exploded, ["band", "key"], "band", "dup_of", idle_timeout)
 
 
 def stream_winnow_overlap(
@@ -653,8 +603,6 @@ def stream_winnow_overlap(
     timeout — the same horizon trade-off ``stream_dedup_exact``
     documents for its watermark).
     """
-    from pyspark.sql import functions as F
-
     from ..pipeline.text import winnow_fingerprints
 
     fps = winnow_fingerprints(
@@ -665,53 +613,7 @@ def stream_winnow_overlap(
         spread=False,  # keep the stream plan exchange-free (stateless Generates only)
     )
 
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("fp", LongType()),
-            StructField("overlap_with", LongType()),
-        ]
-    )
-    state_schema = StructType([StructField("first_doc", LongType())])
-
-    def process(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        new = new.sort_values("doc_id", kind="mergesort")
-        if state.exists:
-            (first_doc,) = state.get
-        else:
-            first_doc = int(new["doc_id"].iloc[0])
-            state.update((first_doc,))
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
-        hits = new[new["doc_id"] != first_doc]
-        if len(hits):
-            yield pd.DataFrame(
-                {
-                    "doc_id": hits["doc_id"].astype("int64"),
-                    "fp": hits["fp"].astype("int64"),
-                    "overlap_with": first_doc,
-                }
-            )
-
-    return fps.groupBy("fp").applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
+    return _first_arrival(fps, ["fp"], "fp", "overlap_with", idle_timeout)
 
 
 def stream_dedup_exact(
@@ -733,6 +635,7 @@ def stream_dedup_exact(
     return stream_df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
         list(keys)
     )
+
 
 def stream_heavy_hitters(
     stream_items: DataFrame,
@@ -765,8 +668,6 @@ def stream_heavy_hitters(
     with the batch pass 2 (broadcast semi-join re-count) — the same
     two-phase contract as the batch operator.
     """
-    from pyspark.sql import functions as F
-
     from ..pipeline.frequent import mg_fold
 
     routed = stream_items.select(
@@ -862,8 +763,6 @@ def stream_containment_screen(
     algebra (tokenize -> distinct grams -> xxhash64 -> explode), so
     the plan streams unchanged from the batch twin's probe leg.
     """
-    from pyspark.sql import functions as F
-
     from ..pipeline.text import shingles, tokens
 
     pct = int(thr_pct)
@@ -928,8 +827,6 @@ def stream_pack_sequences(
     computed BEFORE the stateful operator so the state kernel only
     sees (doc_id, n_tokens).
     """
-    from pyspark.sql import functions as F
-
     from ..pipeline.text import tokens
 
     slim = stream_docs.select(
@@ -937,29 +834,9 @@ def stream_pack_sequences(
         "doc_id",
         F.size(tokens(F.col(text_col))).cast("long").alias("n_tokens"),
     )
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("part", StringType()),
-            StructField("n_tokens", LongType()),
-            StructField("seq_id", LongType()),
-            StructField("seq_offset", LongType()),
-            StructField("straddles_boundary", BooleanType()),
-        ]
-    )
-    state_schema = StructType([StructField("cum", LongType())])
 
-    def process(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        cum = int(state.get[0]) if state.exists else 0
-        new = new.sort_values("doc_id", kind="mergesort")
+    def fold(key, new, st):
+        cum = int(st[0])
         rows = []
         for doc_id, nt in zip(
             new["doc_id"].astype("int64"), new["n_tokens"].astype("int64")
@@ -978,21 +855,25 @@ def stream_pack_sequences(
                 }
             )
             cum += nt
-        state.update((cum,))
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
-        yield pd.DataFrame(rows)
+        return (cum,), rows
 
-    return slim.groupBy("part").applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return keyed_fold(
+        slim,
+        ["part"],
+        [StructField("cum", LongType())],
+        [
+            StructField("doc_id", LongType()),
+            StructField("part", StringType()),
+            StructField("n_tokens", LongType()),
+            StructField("seq_id", LongType()),
+            StructField("seq_offset", LongType()),
+            StructField("straddles_boundary", BooleanType()),
+        ],
+        fold,
+        init=(0,),
+        order="doc_id",
+        idle_timeout=idle_timeout,
+        emit_keys=False,
     )
 
 
@@ -1021,9 +902,6 @@ def stream_ivfpq_encode(
     that re-trained its codebooks from the stream would silently
     shift every stored code's meaning.
     """
-    import numpy as np
-    import pandas as pd  # noqa: PLC0415
-
     cents = np.asarray(centroids)
     bks = np.asarray(codebooks)
     m, _, dsub = bks.shape
@@ -1159,9 +1037,6 @@ def stream_ivfpq_search(
     ``_adc_topk(..., refine=0)`` is tested per query across
     micro-batch boundaries.
     """
-    import numpy as np
-    from pyspark.sql import functions as F
-
     n_cells = int(meta["n_cells"])
     centroids = meta["centroids"]
     bks = np.asarray(meta["codebooks"])
@@ -1246,31 +1121,10 @@ def stream_ivfpq_search(
     ).select("query_id", "vec_id", F.round("adc_d2", 6).alias("adc_d2"))
 
     # --- 4. per-query running top-k (the one stateful operator) ---
-    out_schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField("vec_id", LongType()),
-            StructField("adc_d2", DoubleType()),
-            StructField("rank", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("adcs", ArrayType(DoubleType())),
-            StructField("ids", ArrayType(LongType())),
-        ]
-    )
 
-    def process(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
+    def fold(key, new, st):
         pairs = list(zip(new["adc_d2"].astype(float), new["vec_id"].astype(int)))
-        if state.exists:
-            adcs, ids = state.get
-            pairs.extend(zip(adcs, ids))
+        pairs.extend(zip(*st))
         # dedup by vec_id keeping the best adc: a replayed/duplicated
         # source file re-sends a query_id's candidates, and without
         # this the same vec_id would occupy multiple top-k slots
@@ -1280,24 +1134,27 @@ def stream_ivfpq_search(
         for adc, vid in pairs:
             if vid not in best or adc < best[vid]:
                 best[vid] = adc
-        pairs = sorted((adc, vid) for vid, adc in best.items())
-        top = pairs[:k]
-        state.update(([p[0] for p in top], [p[1] for p in top]))
-        yield pd.DataFrame(
-            {
-                "query_id": key[0],
-                "vec_id": [p[1] for p in top],
-                "adc_d2": [p[0] for p in top],
-                "rank": range(1, len(top) + 1),
-            }
-        )
+        top = sorted((adc, vid) for vid, adc in best.items())[:k]
+        return ([p[0] for p in top], [p[1] for p in top]), {
+            "vec_id": [p[1] for p in top],
+            "adc_d2": [p[0] for p in top],
+            "rank": range(1, len(top) + 1),
+        }
 
-    return scored.groupBy("query_id").applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        scored,
+        ["query_id"],
+        [
+            StructField("adcs", ArrayType(DoubleType())),
+            StructField("ids", ArrayType(LongType())),
+        ],
+        [
+            StructField("vec_id", LongType()),
+            StructField("adc_d2", DoubleType()),
+            StructField("rank", LongType()),
+        ],
+        fold,
+        init=((), ()),
     )
 
 
@@ -1340,8 +1197,6 @@ def stream_hamming_screen(
     frozen index this screen joins is the previous tick's corpus,
     the same contract as ``stream_containment_screen``.
     """
-    from pyspark.sql import functions as F
-
     from ..pipeline.dedup import _hamming_chunks
 
     probe = _hamming_chunks(

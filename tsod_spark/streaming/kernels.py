@@ -16,8 +16,22 @@ batch).
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
+
+
+def cents(v: float) -> int:
+    """Integer cents of ``v``, rounded half away from zero: the twin of
+    Spark's ``F.round(v * 100)`` (HALF_UP). Python's ``round`` is
+    half-even and would put 0.125 at 12, not 13."""
+    return (-1 if v < 0 else 1) * int(math.floor(abs(v) * 100 + 0.5))
+
+
+def cents_array(v: np.ndarray) -> np.ndarray:
+    """:func:`cents` over an array, as float (NaN stays NaN)."""
+    return np.sign(v) * np.floor(np.abs(v) * 100 + 0.5)
 
 
 def range_kernel(ts, value, offset, mn, mx):
@@ -121,8 +135,7 @@ def seasonal_residual_kernel(ts, value, offset, seasonal, thr, trend_window, pha
         return np.zeros(len(value), dtype=bool)
     full = 2 * trend_window + 1
     v = value.to_numpy(dtype=float)
-    # round-half-away like Spark's F.round (np.round is half-even)
-    vc = np.sign(v) * np.floor(np.abs(v) * 100 + 0.5)
+    vc = cents_array(v)
     tr = (
         pd.Series(vc).rolling(full, center=True, min_periods=full).sum().to_numpy()
         / (100.0 * full)

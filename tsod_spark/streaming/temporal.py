@@ -37,20 +37,21 @@ interval join whose time bound is the state-retention contract):
 
 Scale notes: EWMA state is O(1) per series and keep-last state is one
 row per key — key COUNT is the only growth axis, bounded by
-``idle_timeout`` eviction where offered. The rollup's state is O(open
+``idle_timeout`` eviction where offered. Every stateful operator here
+runs on the one keyed-fold skeleton, :mod:`._fold`, which states the
+late-row and eviction contract once. The rollup's state is O(open
 windows × keys) with watermark eviction, independent of stream length.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+import math
+from typing import Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-from ..util import py_round6
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -58,8 +59,11 @@ from pyspark.sql.types import (
     LongType,
     StringType,
     StructField,
-    StructType,
 )
+
+from ..util import py_round6
+from ._fold import after_cursor, keyed_fold, micros
+from .kernels import cents, cents_array
 
 _LEVEL_DURATION = {
     "minute": "1 minute",
@@ -67,6 +71,40 @@ _LEVEL_DURATION = {
     "day": "1 day",
     "week": "7 days",
 }
+
+
+def _close_hours(new, ts_col, value_col, pend_hb, pend_sum):
+    """Fold rows into calendar-hour integer-cent sums.
+
+    Returns ``(closed, pend_hb, pend_sum)``: ``closed`` lists the
+    ``(hour, cent_sum)`` buckets that a later-hour row closed, in
+    order, and the latest hour stays pending. NaN values add nothing;
+    a row behind the pending hour is dropped (bound disorder upstream
+    with ``withWatermark``).
+    """
+    closed = []
+    hbs = (micros(new[ts_col]) // 3_600_000_000).to_numpy()
+    for y, hb in zip(new[value_col].astype(float).to_numpy(), hbs):
+        if math.isnan(y):
+            continue
+        hb, c = int(hb), cents(y)
+        if pend_hb is None:
+            pend_hb, pend_sum = hb, c
+        elif hb == pend_hb:
+            pend_sum += c
+        elif hb > pend_hb:
+            closed.append((int(pend_hb), int(pend_sum)))
+            pend_hb, pend_sum = hb, c
+    return closed, pend_hb, pend_sum
+
+
+def _row_fields(stream_df, ts_col, tiebreak, *fields):
+    """Output fields of a per-row emitter: tiebreak, ts, then ``fields``."""
+    return [
+        StructField(tiebreak, stream_df.schema[tiebreak].dataType),
+        StructField("ts", stream_df.schema[ts_col].dataType),
+        *fields,
+    ]
 
 
 def stream_ewma(
@@ -90,54 +128,12 @@ def stream_ewma(
     state (pandas computes ``((1-α)y + αx)/((1-α)+α)`` — for α with an
     exact-double complement the denominator is exactly 1).
 
-    Rows at or before the per-series (ts, tiebreak) cursor would land
-    before already-emitted positions and are dropped — bound disorder
-    upstream with ``withWatermark`` (same contract as ``stream_detect``).
+    Late rows and ``idle_timeout``: the
+    :mod:`~tsod_spark.streaming._fold` contract.
     """
-    series = list(series)
-    key_fields = [stream_df.schema[c] for c in series]
-    out_schema = StructType(
-        key_fields
-        + [
-            StructField(tiebreak, stream_df.schema[tiebreak].dataType),
-            StructField("ts", stream_df.schema[ts_col].dataType),
-            StructField(out_col, DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("y", DoubleType()),
-            StructField("has_y", BooleanType()),
-            StructField("cur_ts", LongType()),  # micros
-            StructField("cur_tb", LongType()),
-        ]
-    )
 
-    def process(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        new = new.sort_values([ts_col, tiebreak], kind="mergesort")
-        if state.exists:
-            y, has_y, cur_ts, cur_tb = state.get
-        else:
-            y, has_y, cur_ts, cur_tb = 0.0, False, None, None
-
-        new_ts = pd.to_datetime(new[ts_col]).astype("int64") // 1000
-        new_tb = new[tiebreak].astype("int64")
-        if cur_ts is not None:
-            ok = (new_ts > cur_ts) | ((new_ts == cur_ts) & (new_tb > cur_tb))
-            if not ok.all():
-                new = new[ok.to_numpy()]
-                new_ts, new_tb = new_ts[ok], new_tb[ok]
-            if len(new) == 0:
-                if idle_timeout is not None:
-                    state.setTimeoutDuration(idle_timeout)
-                return
-
+    def fold(key, new, st):
+        y, has_y = st
         v = new[value_col].astype(float)
         compact = v.dropna()
         if len(compact):
@@ -156,29 +152,22 @@ def stream_ewma(
             y, has_y = float(smoothed.iloc[-1]), True
         else:
             out_y = pd.Series([y if has_y else None] * len(v), index=v.index, dtype=float)
+        return (y, has_y), {
+            tiebreak: new[tiebreak].to_numpy(),
+            "ts": new[ts_col].to_numpy(),
+            out_col: out_y.to_numpy(),
+        }
 
-        state.update((y, has_y, int(new_ts.iloc[-1]), int(new_tb.iloc[-1])))
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
-        yield pd.DataFrame(
-            {
-                **{c: key[i] for i, c in enumerate(series)},
-                tiebreak: new[tiebreak].to_numpy(),
-                "ts": new[ts_col].to_numpy(),
-                out_col: out_y.to_numpy(),
-            }
-        )
-
-    return stream_df.groupBy(*series).applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return keyed_fold(
+        stream_df,
+        series,
+        [StructField("y", DoubleType()), StructField("has_y", BooleanType())],
+        _row_fields(stream_df, ts_col, tiebreak, StructField(out_col, DoubleType())),
+        fold,
+        init=(0.0, False),
+        order=[ts_col, tiebreak],
+        cursor=(ts_col, tiebreak),
+        idle_timeout=idle_timeout,
     )
 
 
@@ -197,63 +186,17 @@ def stream_holt(
     the (ts, tiebreak) cursor — the two-state recurrence continues
     bit-identically across micro-batches because each step only reads
     the prior pair, which IS the state. Null/NaN rows carry state
-    forward; rows at or before the cursor are dropped (same disorder
-    contract as :func:`stream_ewma`)."""
-    import math  # noqa: PLC0415
-
-    series = list(series)
+    forward. Late rows and ``idle_timeout``: the
+    :mod:`~tsod_spark.streaming._fold` contract."""
     a, b = float(alpha), float(beta)
     ca, cb = 1.0 - a, 1.0 - b
-    key_fields = [stream_df.schema[c] for c in series]
-    out_schema = StructType(
-        key_fields
-        + [
-            StructField(tiebreak, stream_df.schema[tiebreak].dataType),
-            StructField("ts", stream_df.schema[ts_col].dataType),
-            StructField("level", DoubleType()),
-            StructField("trend", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("l", DoubleType()),
-            StructField("t", DoubleType()),
-            StructField("has", BooleanType()),
-            StructField("cur_ts", LongType()),
-            StructField("cur_tb", LongType()),
-        ]
-    )
 
-    def process(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        new = new.sort_values([ts_col, tiebreak], kind="mergesort")
-        if state.exists:
-            l, t, has, cur_ts, cur_tb = state.get
-        else:
-            l, t, has, cur_ts, cur_tb = 0.0, 0.0, False, None, None
-
-        new_ts = pd.to_datetime(new[ts_col]).astype("int64") // 1000
-        new_tb = new[tiebreak].astype("int64")
-        if cur_ts is not None:
-            ok = (new_ts > cur_ts) | ((new_ts == cur_ts) & (new_tb > cur_tb))
-            if not ok.all():
-                new = new[ok.to_numpy()]
-                new_ts, new_tb = new_ts[ok], new_tb[ok]
-            if len(new) == 0:
-                if idle_timeout is not None:
-                    state.setTimeoutDuration(idle_timeout)
-                return
-
-        v = new[value_col].astype(float).to_numpy()
+    def fold(key, new, st):
+        l, t, has = st
         lv, tr = [], []
         if not has:
             l = t = math.nan
-        for y in v:
+        for y in new[value_col].astype(float).to_numpy():
             if not math.isnan(y):
                 if math.isnan(l):
                     l, t = y, 0.0
@@ -264,37 +207,33 @@ def stream_holt(
             lv.append(l)
             tr.append(t)
         has = not math.isnan(l)
-        state.update(
-            (
-                l if has else 0.0,
-                t if has else 0.0,
-                has,
-                int(new_ts.iloc[-1]),
-                int(new_tb.iloc[-1]),
-            )
-        )
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
-        yield pd.DataFrame(
-            {
-                **{c: key[i] for i, c in enumerate(series)},
-                tiebreak: new[tiebreak].to_numpy(),
-                "ts": new[ts_col].to_numpy(),
-                "level": lv,
-                "trend": tr,
-            }
-        )
+        return (l if has else 0.0, t if has else 0.0, has), {
+            tiebreak: new[tiebreak].to_numpy(),
+            "ts": new[ts_col].to_numpy(),
+            "level": lv,
+            "trend": tr,
+        }
 
-    return stream_df.groupBy(*series).applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
+    return keyed_fold(
+        stream_df,
+        series,
+        [
+            StructField("l", DoubleType()),
+            StructField("t", DoubleType()),
+            StructField("has", BooleanType()),
+        ],
+        _row_fields(
+            stream_df,
+            ts_col,
+            tiebreak,
+            StructField("level", DoubleType()),
+            StructField("trend", DoubleType()),
         ),
+        fold,
+        init=(0.0, 0.0, False),
+        order=[ts_col, tiebreak],
+        cursor=(ts_col, tiebreak),
+        idle_timeout=idle_timeout,
     )
 
 
@@ -314,55 +253,34 @@ def stream_latest_by_key(
     result over the same rows. Unlike the stream-side window
     formulation (unsupported on streams), this needs no sort and no
     shuffle beyond the keyed grouping; state size scales with key
-    cardinality only (bound churn with ``idle_timeout``).
+    cardinality only (bound churn with ``idle_timeout``, see
+    :mod:`~tsod_spark.streaming._fold`).
     """
     keys = list(keys)
     carry = [c for c in stream_df.columns if c not in keys]
-    key_fields = [stream_df.schema[c] for c in keys]
     carry_fields = [stream_df.schema[c] for c in carry]
-    out_schema = StructType(key_fields + carry_fields)
-    # state stores ts as micros + the tiebreak + the carried row values
-    state_schema = StructType(
-        [StructField("cur_ts", LongType()), StructField("cur_tb", LongType())]
-        + [StructField(f"v_{f.name}", f.dataType) for f in carry_fields]
-    )
 
-    def process(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        ts_us = pd.to_datetime(new[ts_col]).astype("int64") // 1000
+    def fold(key, new, st):
+        ts_us = micros(new[ts_col])
         tb = new[tiebreak].astype("int64")
         best = new.assign(__ts=ts_us, __tb=tb).sort_values(["__ts", "__tb"]).iloc[-1]
-        if state.exists:
-            cur = state.get
-            if (best["__ts"], best["__tb"]) <= (cur[0], cur[1]):
-                if idle_timeout is not None:
-                    state.setTimeoutDuration(idle_timeout)
-                return
-        state.update(
-            (int(best["__ts"]), int(best["__tb"]))
-            + tuple(best[c] for c in carry)
-        )
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
-        yield pd.DataFrame(
-            [{**{c: key[i] for i, c in enumerate(keys)}, **{c: best[c] for c in carry}}]
+        if st[0] is not None and (best["__ts"], best["__tb"]) <= (st[0], st[1]):
+            return None, None
+        return (
+            (int(best["__ts"]), int(best["__tb"])) + tuple(best[c] for c in carry),
+            [{c: best[c] for c in carry}],
         )
 
-    return stream_df.groupBy(*keys).applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    # state stores ts as micros + the tiebreak + the carried row values
+    return keyed_fold(
+        stream_df,
+        keys,
+        [StructField("cur_ts", LongType()), StructField("cur_tb", LongType())]
+        + [StructField(f"v_{f.name}", f.dataType) for f in carry_fields],
+        carry_fields,
+        fold,
+        init=(None,) * (2 + len(carry)),
+        idle_timeout=idle_timeout,
     )
 
 
@@ -586,64 +504,27 @@ def stream_time_weighted_avg(
     batch operator uses, so emitted rows are bit-identical to the
     batch result for every closed bucket.
 
-    Rows at or before the per-series (ts, tiebreak) cursor are dropped
-    (same disorder contract as ``stream_ewma``); the open bucket at
-    stream head has not emitted yet.
+    The open bucket at stream head has not emitted yet. This fold
+    keeps its own (prev_ts, cur_tb) cursor with the same drop rule as
+    the :mod:`~tsod_spark.streaming._fold` contract.
     """
     series = list(series)
-    key_fields = [stream_df.schema[c] for c in series]
-    out_schema = StructType(
-        key_fields
-        + [
-            StructField("bucket_micros", LongType()),
-            StructField("n_events", LongType()),
-            StructField("sw", LongType()),
-            StructField("scw", LongType()),
-            StructField("sc", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("bucket", LongType()),
-            StructField("prev_ts", LongType()),
-            StructField("prev_c", LongType()),
-            StructField("sw", LongType()),
-            StructField("scw", LongType()),
-            StructField("sc", LongType()),
-            StructField("n", LongType()),
-            StructField("cur_tb", LongType()),
-        ]
-    )
 
-    def process(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        new = new.sort_values([ts_col, tiebreak], kind="mergesort")
-        if state.exists:
-            bucket, prev_ts, prev_c, sw, scw, sc, n, cur_tb = state.get
-        else:
-            bucket = prev_ts = prev_c = cur_tb = None
-            sw = scw = sc = n = 0
-
-        ts_us = (pd.to_datetime(new[ts_col]).astype("int64") // 1000).to_numpy()
-        tb = new[tiebreak].astype("int64").to_numpy()
-        vals = new[value_col].astype(float).to_numpy()
-
+    def fold(key, new, st):
+        bucket, prev_ts, prev_c, sw, scw, sc, n, cur_tb = st
         closed = []
-        for t, b, v in zip(ts_us, tb, vals):
+        for t, b, v in zip(
+            micros(new[ts_col]).to_numpy(),
+            new[tiebreak].astype("int64").to_numpy(),
+            new[value_col].astype(float).to_numpy(),
+        ):
             if prev_ts is not None and (t, b) <= (prev_ts, cur_tb):
                 continue  # disorder: behind the cursor
             cur_tb = int(b)
             if v != v:  # NaN: invisible to the aggregate, cursor moves
                 prev_ts = int(t) if prev_ts is None else prev_ts
                 continue
-            c = int(
-                -int(-v * 100 + 0.5) if v < 0 else int(v * 100 + 0.5)
-            )  # round-half-away == F.round on cents
+            c = cents(v)
             bk = (t // bucket_micros) * bucket_micros
             if bucket is None:
                 bucket, prev_ts, prev_c = int(bk), int(t), c
@@ -659,32 +540,39 @@ def stream_time_weighted_avg(
                 closed.append((bucket, n, sw, scw, sc))
                 bucket, prev_ts, prev_c = int(bk), int(t), c
                 sw, scw, sc, n = 0, 0, c, 1
+        st = (bucket, prev_ts, prev_c, sw, scw, sc, n, cur_tb)
+        if not closed:
+            return st, None
+        cols = ("bucket_micros", "n_events", "sw", "scw", "sc")
+        return st, {c: [r[i] for r in closed] for i, c in enumerate(cols)}
 
-        state.update((bucket, prev_ts, prev_c, sw, scw, sc, n, cur_tb))
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
-        if closed:
-            yield pd.DataFrame(
-                {
-                    **{c_: key[i] for i, c_ in enumerate(series)},
-                    "bucket_micros": [r[0] for r in closed],
-                    "n_events": [r[1] for r in closed],
-                    "sw": [r[2] for r in closed],
-                    "scw": [r[3] for r in closed],
-                    "sc": [r[4] for r in closed],
-                }
-            )
-
-    raw = stream_df.groupBy(*series).applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    # The cursor moves row by row and a NaN row advances only the
+    # tiebreak, so this fold keeps its own (prev_ts, cur_tb) cursor.
+    raw = keyed_fold(
+        stream_df,
+        series,
+        [
+            StructField("bucket", LongType()),
+            StructField("prev_ts", LongType()),
+            StructField("prev_c", LongType()),
+            StructField("sw", LongType()),
+            StructField("scw", LongType()),
+            StructField("sc", LongType()),
+            StructField("n", LongType()),
+            StructField("cur_tb", LongType()),
+        ],
+        [
+            StructField("bucket_micros", LongType()),
+            StructField("n_events", LongType()),
+            StructField("sw", LongType()),
+            StructField("scw", LongType()),
+            StructField("sc", LongType()),
+        ],
+        fold,
+        init=(None, None, None, 0, 0, 0, 0, None),
+        order=[ts_col, tiebreak],
+        idle_timeout=idle_timeout,
+        output_mode="append",
     )
     # identical Column expression to the batch operator => bit-identical
     twa = F.when(
@@ -719,93 +607,38 @@ def stream_cusum(
     Null/NaN rows contribute nothing but still emit (flagged by the
     current excursion, exactly like the batch window sum); rows before
     the first observation emit False (the batch NULL-sum coalesce).
-    Rows at or behind the cursor are dropped — bound disorder upstream
-    with ``withWatermark`` (the stream_detect contract).
+    Late rows and ``idle_timeout``: the
+    :mod:`~tsod_spark.streaming._fold` contract.
     """
-    import numpy as np
-
-    series = list(series)
     target_c = int(round(target * 100))
     h_c = int(round(h * 100))
-    key_fields = [stream_df.schema[c] for c in series]
-    out_schema = StructType(
-        key_fields
-        + [
-            StructField(tiebreak, stream_df.schema[tiebreak].dataType),
-            StructField("ts", stream_df.schema[ts_col].dataType),
-            StructField("is_anomaly", BooleanType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("s", LongType()),
-            StructField("seen", BooleanType()),
-            StructField("cur_ts", LongType()),
-            StructField("cur_tb", LongType()),
-        ]
-    )
 
-    def process(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        new = new.sort_values([ts_col, tiebreak], kind="mergesort")
-        if state.exists:
-            s, seen, cur_ts, cur_tb = state.get
-        else:
-            s, seen, cur_ts, cur_tb = 0, False, None, None
-
-        new_ts = pd.to_datetime(new[ts_col]).astype("int64") // 1000
-        new_tb = new[tiebreak].astype("int64")
-        if cur_ts is not None:
-            ok = (new_ts > cur_ts) | ((new_ts == cur_ts) & (new_tb > cur_tb))
-            if not ok.all():
-                new = new[ok.to_numpy()]
-                new_ts, new_tb = new_ts[ok], new_tb[ok]
-            if len(new) == 0:
-                if idle_timeout is not None:
-                    state.setTimeoutDuration(idle_timeout)
-                return
-
+    def fold(key, new, st):
+        s, seen = st
         v = new[value_col].astype(float).to_numpy()
         obs = ~np.isnan(v)
-        # integer cents, rounded half-away-from-zero (Spark F.round's
-        # HALF_UP on the value's decimal repr) — the running sum stays
-        # exact int64 across any number of micro-batches
-        cents = np.zeros(len(v), dtype="int64")
-        av = np.abs(v[obs]) * 100
-        cents[obs] = (np.sign(v[obs]) * np.floor(av + 0.5)).astype("int64") - target_c
-        run = cents.cumsum() + s
-        seen_mask = (obs.cumsum() > 0) | seen
-        flags = seen_mask & (np.abs(run) > h_c)
+        # integer cents — the running sum stays exact int64 across any
+        # number of micro-batches
+        c = np.zeros(len(v), dtype="int64")
+        c[obs] = cents_array(v[obs]).astype("int64") - target_c
+        run = c.cumsum() + s
+        flags = ((obs.cumsum() > 0) | seen) & (np.abs(run) > h_c)
+        return (int(run[-1]), bool(seen or obs.any())), {
+            tiebreak: new[tiebreak].to_numpy(),
+            "ts": new[ts_col].to_numpy(),
+            "is_anomaly": flags,
+        }
 
-        state.update(
-            (int(run[-1]), bool(seen or obs.any()), int(new_ts.iloc[-1]), int(new_tb.iloc[-1]))
-        )
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
-        yield pd.DataFrame(
-            {
-                **{c: key[i] for i, c in enumerate(series)},
-                tiebreak: new[tiebreak].to_numpy(),
-                "ts": new[ts_col].to_numpy(),
-                "is_anomaly": flags,
-            }
-        )
-
-    return stream_df.groupBy(*series).applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return keyed_fold(
+        stream_df,
+        series,
+        [StructField("s", LongType()), StructField("seen", BooleanType())],
+        _row_fields(stream_df, ts_col, tiebreak, StructField("is_anomaly", BooleanType())),
+        fold,
+        init=(0, False),
+        order=[ts_col, tiebreak],
+        cursor=(ts_col, tiebreak),
+        idle_timeout=idle_timeout,
     )
 
 
@@ -833,70 +666,41 @@ def stream_type_entropy(
     exactly-once delivery is assumed (duplicates inflate counts, as
     they would the batch GROUP BY).
     """
-    import math
 
-    series = list(series)
-    key_fields = [stream_df.schema[c] for c in series]
-    out_schema = StructType(
-        key_fields
-        + [
+    def fold(key, new, st):
+        cnt = dict(zip(list(st[0]), [int(c) for c in st[1]]))
+        for t, c in new[type_col].value_counts().items():
+            cnt[t] = cnt.get(t, 0) + int(c)
+        n = sum(cnt.values())
+        k = len(cnt)
+        h = math.log(n) - sum(c * math.log(c) for c in cnt.values()) / n
+        return (list(cnt.keys()), list(cnt.values())), [
+            {
+                "n_events": n,
+                "k_types": k,
+                "entropy_nats": py_round6(h),
+                "entropy_norm": py_round6(h / math.log(k)) if k > 1 else None,
+                "perplexity": py_round6(math.exp(h)),
+            }
+        ]
+
+    return keyed_fold(
+        stream_df,
+        series,
+        [
+            StructField("types", ArrayType(StringType())),
+            StructField("counts", ArrayType(LongType())),
+        ],
+        [
             StructField("n_events", LongType()),
             StructField("k_types", LongType()),
             StructField("entropy_nats", DoubleType()),
             StructField("entropy_norm", DoubleType()),
             StructField("perplexity", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("types", ArrayType(StringType())),
-            StructField("counts", ArrayType(LongType())),
-        ]
-    )
-
-    def process(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        if state.exists:
-            types, counts = state.get
-            cnt = dict(zip(list(types), [int(c) for c in counts]))
-        else:
-            cnt = {}
-        for t, c in new[type_col].value_counts().items():
-            cnt[t] = cnt.get(t, 0) + int(c)
-        state.update((list(cnt.keys()), list(cnt.values())))
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
-        n = sum(cnt.values())
-        k = len(cnt)
-        h = math.log(n) - sum(c * math.log(c) for c in cnt.values()) / n
-        yield pd.DataFrame(
-            [
-                {
-                    **{c: key[i] for i, c in enumerate(series)},
-                    "n_events": n,
-                    "k_types": k,
-                    "entropy_nats": py_round6(h),
-                    "entropy_norm": py_round6(h / math.log(k)) if k > 1 else None,
-                    "perplexity": py_round6(math.exp(h)),
-                }
-            ]
-        )
-
-    return stream_df.groupBy(*series).applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+        ],
+        fold,
+        init=((), ()),
+        idle_timeout=idle_timeout,
     )
 
 
@@ -924,76 +728,43 @@ def stream_dispersion(
     stream_type_entropy discipline), so the last emission per key over
     the same rows equals the batch result.
     """
-    import math  # noqa: F401  (kept for parity with sibling monitors)
 
-    series = list(series)
-    key_fields = [stream_df.schema[c] for c in series]
-    out_schema = StructType(
-        key_fields
-        + [
+    def fold(key, new, st):
+        cnt = dict(zip([int(h) for h in st[0]], [int(c) for c in st[1]]))
+        for h, c in (micros(new[ts_col]) // 3600000000).value_counts().items():
+            cnt[int(h)] = cnt.get(int(h), 0) + int(c)
+        span = max(cnt) - min(cnt) + 1
+        t = sum(cnt.values())
+        q = sum(c * c for c in cnt.values())
+        disp = (span * q - t * t) / (span * t)
+        over = span > 1 and disp > 1.0 + 2.0 * (2.0 / (span - 1)) ** 0.5
+        return (list(cnt.keys()), list(cnt.values())), [
+            {
+                "n_buckets": span,
+                "n_events": t,
+                "mean_per_hour": py_round6(t / span),
+                "dispersion": py_round6(disp),
+                "overdispersed": bool(over),
+            }
+        ]
+
+    return keyed_fold(
+        stream_df,
+        series,
+        [
+            StructField("hbs", ArrayType(LongType())),
+            StructField("counts", ArrayType(LongType())),
+        ],
+        [
             StructField("n_buckets", LongType()),
             StructField("n_events", LongType()),
             StructField("mean_per_hour", DoubleType()),
             StructField("dispersion", DoubleType()),
             StructField("overdispersed", BooleanType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("hbs", ArrayType(LongType())),
-            StructField("counts", ArrayType(LongType())),
-        ]
-    )
-
-    def process(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        if state.exists:
-            hbs, counts = state.get
-            cnt = dict(zip([int(h) for h in hbs], [int(c) for c in counts]))
-        else:
-            cnt = {}
-        hb = pd.to_datetime(new[ts_col]).astype("int64") // 1000 // 3600000000
-        for h, c in hb.value_counts().items():
-            cnt[int(h)] = cnt.get(int(h), 0) + int(c)
-        state.update((list(cnt.keys()), list(cnt.values())))
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
-        span = max(cnt) - min(cnt) + 1
-        t = sum(cnt.values())
-        q = sum(c * c for c in cnt.values())
-        disp = (span * q - t * t) / (span * t)
-        over = (
-            span > 1
-            and disp > 1.0 + 2.0 * (2.0 / (span - 1)) ** 0.5
-        )
-        yield pd.DataFrame(
-            [
-                {
-                    **{c: key[i] for i, c in enumerate(series)},
-                    "n_buckets": span,
-                    "n_events": t,
-                    "mean_per_hour": py_round6(t / span),
-                    "dispersion": py_round6(disp),
-                    "overdispersed": bool(over),
-                }
-            ]
-        )
-
-    return stream_df.groupBy(*series).applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+        ],
+        fold,
+        init=((), ()),
+        idle_timeout=idle_timeout,
     )
 
 
@@ -1029,66 +800,16 @@ def stream_holt_winters(
     fold order and the dyadic recurrence match term-for-term and the
     bucket sums are integers in both.
     """
-    import math  # noqa: PLC0415
-
-    series = list(series)
     a, b, g = float(alpha), float(beta), float(gamma)
     ca, cb, cg = 1.0 - a, 1.0 - b, 1.0 - g
     m = int(period)
-    key_fields = [stream_df.schema[c] for c in series]
-    out_schema = StructType(
-        key_fields
-        + [
-            StructField("hour_bucket", LongType()),
-            StructField("level", DoubleType()),
-            StructField("trend", DoubleType()),
-            StructField("season", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("l", DoubleType()),
-            StructField("t", DoubleType()),
-            StructField("s", ArrayType(DoubleType())),
-            StructField("has", BooleanType()),
-            StructField("pend_hb", LongType()),
-            StructField("pend_sum", LongType()),
-            StructField("cur_ts", LongType()),
-            StructField("cur_tb", LongType()),
-        ]
-    )
 
-    def process(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        new = new.sort_values([ts_col, tiebreak], kind="mergesort")
-        if state.exists:
-            l, t, s, has, pend_hb, pend_sum, cur_ts, cur_tb = state.get
-            s = [float(x) for x in s]
-        else:
-            l, t, s, has = 0.0, 0.0, [0.0] * m, False
-            pend_hb, pend_sum, cur_ts, cur_tb = None, 0, None, None
-
-        new_ts = pd.to_datetime(new[ts_col]).astype("int64") // 1000
-        new_tb = new[tiebreak].astype("int64")
-        if cur_ts is not None:
-            ok = (new_ts > cur_ts) | ((new_ts == cur_ts) & (new_tb > cur_tb))
-            if not ok.all():
-                new = new[ok.to_numpy()]
-                new_ts, new_tb = new_ts[ok], new_tb[ok]
-            if len(new) == 0:
-                if idle_timeout is not None:
-                    state.setTimeoutDuration(idle_timeout)
-                return
-
+    def fold(key, new, st):
+        l, t, s, has, pend_hb, pend_sum = st
+        s = [float(x) for x in s]
+        closed, pend_hb, pend_sum = _close_hours(new, ts_col, value_col, pend_hb, pend_sum)
         emitted = []
-
-        def fold(hb: int, total: int):
-            nonlocal l, t, has
+        for hb, total in closed:
             y = float(total)
             h = int(hb % m)
             if not has:
@@ -1100,59 +821,31 @@ def stream_holt_winters(
                 t = b * (nl - l) + cb * t
                 s[h] = g * (y - nl) + cg * s[h]
                 l = nl
-            emitted.append((hb, l, t, s[h]))
+            emitted.append({"hour_bucket": hb, "level": l, "trend": t, "season": s[h]})
+        return (l, t, s, has, pend_hb, pend_sum), emitted or None
 
-        vals = new[value_col].astype(float).to_numpy()
-        hbs = (new_ts // 3_600_000_000).to_numpy()
-        for y, hb in zip(vals, hbs):
-            if math.isnan(y):
-                continue
-            # half-away-from-zero, matching F.round in the batch twin
-            # (Python round() is banker's half-even: 0.125*100 = 12.5
-            # would quantize 12 vs the batch's 13 and the one-cent skew
-            # compounds through level/trend/season state)
-            c = (-1 if y < 0 else 1) * int(math.floor(abs(y) * 100 + 0.5))
-            if pend_hb is None:
-                pend_hb, pend_sum = int(hb), c
-            elif int(hb) == pend_hb:
-                pend_sum += c
-            else:
-                fold(pend_hb, pend_sum)
-                pend_hb, pend_sum = int(hb), c
-
-        state.update(
-            (
-                l, t, s, has,
-                pend_hb, pend_sum,
-                int(new_ts.iloc[-1]), int(new_tb.iloc[-1]),
-            )
-        )
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
-        if emitted:
-            yield pd.DataFrame(
-                [
-                    {
-                        **{c2: key[i] for i, c2 in enumerate(series)},
-                        "hour_bucket": hb,
-                        "level": lv,
-                        "trend": tr,
-                        "season": se,
-                    }
-                    for hb, lv, tr, se in emitted
-                ]
-            )
-
-    return stream_df.groupBy(*series).applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return keyed_fold(
+        stream_df,
+        series,
+        [
+            StructField("l", DoubleType()),
+            StructField("t", DoubleType()),
+            StructField("s", ArrayType(DoubleType())),
+            StructField("has", BooleanType()),
+            StructField("pend_hb", LongType()),
+            StructField("pend_sum", LongType()),
+        ],
+        [
+            StructField("hour_bucket", LongType()),
+            StructField("level", DoubleType()),
+            StructField("trend", DoubleType()),
+            StructField("season", DoubleType()),
+        ],
+        fold,
+        init=(0.0, 0.0, (0.0,) * m, False, None, 0),
+        order=[ts_col, tiebreak],
+        cursor=(ts_col, tiebreak),
+        idle_timeout=idle_timeout,
     )
 
 
@@ -1187,30 +880,6 @@ def stream_peaks(
     ``base_span`` hours stay pending — the honest cost of a
     non-causal operator on a stream).
     """
-    import math  # noqa: PLC0415
-
-    series = list(series)
-    key_fields = [stream_df.schema[c] for c in series]
-    out_schema = StructType(
-        key_fields
-        + [
-            StructField("hour_bucket", LongType()),
-            StructField("y_cents", LongType()),
-            StructField("kind", StringType()),
-            StructField("height_cents", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("hbs", ArrayType(LongType())),
-            StructField("ys", ArrayType(LongType())),
-            StructField("decided_to", LongType()),
-            StructField("pend_hb", LongType()),
-            StructField("pend_sum", LongType()),
-            StructField("cur_ts", LongType()),
-            StructField("cur_tb", LongType()),
-        ]
-    )
     thr = float(min_height_cents)
 
     def decide(buf: dict, b: int):
@@ -1226,99 +895,52 @@ def stream_peaks(
             return ("valley", height)
         return None
 
-    def process(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        new = new.sort_values([ts_col, tiebreak], kind="mergesort")
-        if state.exists:
-            hbs, ys, decided_to, pend_hb, pend_sum, cur_ts, cur_tb = state.get
-            buf = dict(zip([int(h) for h in hbs], [int(v) for v in ys]))
-        else:
-            buf, decided_to = {}, None
-            pend_hb, pend_sum, cur_ts, cur_tb = None, 0, None, None
-
-        new_ts = pd.to_datetime(new[ts_col]).astype("int64") // 1000
-        new_tb = new[tiebreak].astype("int64")
-        if cur_ts is not None:
-            ok = (new_ts > cur_ts) | ((new_ts == cur_ts) & (new_tb > cur_tb))
-            if not ok.all():
-                new = new[ok.to_numpy()]
-                new_ts, new_tb = new_ts[ok], new_tb[ok]
-            if len(new) == 0:
-                if idle_timeout is not None:
-                    state.setTimeoutDuration(idle_timeout)
-                return
-
+    def fold(key, new, st):
+        hbs, ys, decided_to, pend_hb, pend_sum = st
+        buf = dict(zip([int(h) for h in hbs], [int(v) for v in ys]))
+        closed, pend_hb, pend_sum = _close_hours(new, ts_col, value_col, pend_hb, pend_sum)
         emitted = []
-
-        def advance(new_hb: int):
-            nonlocal pend_hb, pend_sum, decided_to
-            # close the pending bucket into the buffer, then decide
-            # everything whose +base_span horizon the NEW bucket passes
-            buf[pend_hb] = pend_sum
-            for b in sorted(h for h in buf if h + base_span < new_hb
-                            and (decided_to is None or h > decided_to)):
+        # each closed bucket enters the buffer when the next one opens;
+        # then decide everything whose +base_span horizon that passes
+        for (hb0, y0), nxt in zip(closed, [h for h, _ in closed[1:]] + [pend_hb]):
+            buf[hb0] = y0
+            for b in sorted(
+                h for h in buf if h + base_span < nxt and (decided_to is None or h > decided_to)
+            ):
                 v = decide(buf, b)
                 if v is not None:
-                    emitted.append((b, buf[b], v[0], v[1]))
+                    emitted.append(
+                        {"hour_bucket": b, "y_cents": buf[b], "kind": v[0], "height_cents": py_round6(v[1])}
+                    )
                 decided_to = b
             # prune: keep only buckets still inside some undecided
             # bucket's base window
             lo = (decided_to + 1 if decided_to is not None else min(buf)) - base_span
             for h in [h for h in buf if h < lo]:
                 del buf[h]
-            pend_hb, pend_sum = new_hb, 0
+        return (list(buf.keys()), list(buf.values()), decided_to, pend_hb, pend_sum), emitted or None
 
-        vals = new[value_col].astype(float).to_numpy()
-        hbs_arr = (new_ts // 3_600_000_000).to_numpy()
-        for y, hb in zip(vals, hbs_arr):
-            if math.isnan(y):
-                continue
-            # half-away-from-zero, matching F.round in the batch twin
-            c = (-1 if y < 0 else 1) * int(math.floor(abs(y) * 100 + 0.5))
-            if pend_hb is None:
-                pend_hb, pend_sum = int(hb), 0
-            elif int(hb) != pend_hb:
-                advance(int(hb))
-            pend_sum += c
-
-        state.update(
-            (
-                list(buf.keys()), list(buf.values()),
-                decided_to, pend_hb, pend_sum,
-                int(new_ts.iloc[-1]), int(new_tb.iloc[-1]),
-            )
-        )
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
-        if emitted:
-            yield pd.DataFrame(
-                [
-                    {
-                        **{c2: key[i] for i, c2 in enumerate(series)},
-                        "hour_bucket": b,
-                        "y_cents": yc,
-                        "kind": kind,
-                        "height_cents": py_round6(h),
-                    }
-                    for b, yc, kind, h in emitted
-                ]
-            )
-
-    return stream_df.groupBy(*series).applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return keyed_fold(
+        stream_df,
+        series,
+        [
+            StructField("hbs", ArrayType(LongType())),
+            StructField("ys", ArrayType(LongType())),
+            StructField("decided_to", LongType()),
+            StructField("pend_hb", LongType()),
+            StructField("pend_sum", LongType()),
+        ],
+        [
+            StructField("hour_bucket", LongType()),
+            StructField("y_cents", LongType()),
+            StructField("kind", StringType()),
+            StructField("height_cents", DoubleType()),
+        ],
+        fold,
+        init=((), (), None, None, 0),
+        order=[ts_col, tiebreak],
+        cursor=(ts_col, tiebreak),
+        idle_timeout=idle_timeout,
     )
 
 
@@ -1344,73 +966,39 @@ def stream_benford(
     continuous control chart: the flag flips the moment the digit mix
     drifts off the log-law, without rescanning history.
     """
-    import numpy as np
-
     from ..queries.round7 import _BENFORD_P
 
-    series = list(series)
-    key_fields = [stream_df.schema[c] for c in series]
-    out_schema = StructType(
-        key_fields
-        + [
-            StructField("n", LongType()),
-            StructField("chi2", DoubleType()),
-            StructField("benford_flag", BooleanType()),
-        ]
-    )
-    state_schema = StructType([StructField("counts", ArrayType(LongType()))])
-
-    def process(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        counts = [int(c) for c in state.get[0]] if state.exists else [0] * 9
+    def fold(key, new, st):
+        counts = [int(c) for c in st[0]]
         v = new[value_col].astype(float).to_numpy()
-        obs = ~np.isnan(v)
-        av = np.abs(v[obs]) * 100
-        # half-away-from-zero cents, the shared stream-kernel quantizer
-        cents = (np.sign(v[obs]) * np.floor(av + 0.5)).astype("int64")
-        cents = cents[cents != 0]
-        for c in cents:
-            counts[int(str(abs(int(c)))[0]) - 1] += 1
+        c = cents_array(v[~np.isnan(v)]).astype("int64")
+        for x in c[c != 0]:
+            counts[int(str(abs(int(x)))[0]) - 1] += 1
         n = sum(counts)
         if n == 0:
-            if idle_timeout is not None:
-                state.setTimeoutDuration(idle_timeout)
-            return
-        state.update((counts,))
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
+            return None, None
         # identical term order + literals as the batch chi2 fold
         chi2 = None
         nd = float(n)
         for o, p in zip(counts, _BENFORD_P):
             term = (float(o) - nd * p) * (float(o) - nd * p) / (nd * p)
             chi2 = term if chi2 is None else chi2 + term
-        yield pd.DataFrame(
-            [
-                {
-                    **{c: key[i] for i, c in enumerate(series)},
-                    "n": n,
-                    "chi2": py_round6(chi2),
-                    "benford_flag": bool(chi2 > 15.507),
-                }
-            ]
-        )
+        return (counts,), [
+            {"n": n, "chi2": py_round6(chi2), "benford_flag": bool(chi2 > 15.507)}
+        ]
 
-    return stream_df.groupBy(*series).applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return keyed_fold(
+        stream_df,
+        series,
+        [StructField("counts", ArrayType(LongType()))],
+        [
+            StructField("n", LongType()),
+            StructField("chi2", DoubleType()),
+            StructField("benford_flag", BooleanType()),
+        ],
+        fold,
+        init=((0,) * 9,),
+        idle_timeout=idle_timeout,
     )
 
 
@@ -1433,97 +1021,66 @@ def stream_interarrival(
     is accounted exactly, and all floats are derived fresh from the
     integer moments at emission (the batch operator's ``n·q − t²``
     identity), so snapshots are bit-identical to batch over the same
-    rows.  Rows at or behind the cursor are dropped (the stream_detect
-    disorder contract).
+    rows.  Late rows and ``idle_timeout``: the
+    :mod:`~tsod_spark.streaming._fold` contract.
     """
-    series = list(series)
-    key_fields = [stream_df.schema[c] for c in series]
-    out_schema = StructType(
-        key_fields
-        + [
-            StructField("n_gaps", LongType()),
-            StructField("mean_gap_s", DoubleType()),
-            StructField("std_gap_s", DoubleType()),
-            StructField("cv", DoubleType()),
-            StructField("burstiness", DoubleType()),
+
+    def fold(key, new, st):
+        n, t, q, cur_ts, cur_tb = st
+        n, t, q = int(n), int(t), int(q)
+        # the first gap reads the stored cursor, so the cursor is kept
+        # here rather than by the skeleton (same filter, same fields)
+        _, ts, tb = after_cursor(new, ts_col, tiebreak, cur_ts, cur_tb)
+        if len(ts) == 0:
+            return None, None
+        ts_list = [int(x) for x in ts.to_numpy()]
+        prev = int(cur_ts) if cur_ts is not None else None
+        for us in ts_list:
+            if prev is not None:
+                gap = (us - prev) // 1_000_000
+                n += 1
+                t += gap
+                q += gap * gap
+            prev = us
+        st = (n, t, q, ts_list[-1], int(tb.iloc[-1]))
+        if n == 0:
+            return st, None
+        root = math.sqrt(float(n * q - t * t))
+        return st, [
+            {
+                "n_gaps": n,
+                "mean_gap_s": py_round6(t / n),
+                "std_gap_s": py_round6(root / n),
+                "cv": py_round6(root / t) if t > 0 else None,
+                "burstiness": (
+                    py_round6((root - float(t)) / (root + float(t)))
+                    if root + float(t) > 0
+                    else None
+                ),
+            }
         ]
-    )
-    state_schema = StructType(
+
+    return keyed_fold(
+        stream_df,
+        series,
         [
             StructField("n", LongType()),
             StructField("t", LongType()),
             StructField("q", LongType()),
             StructField("cur_ts", LongType()),
             StructField("cur_tb", LongType()),
-        ]
-    )
-
-    def process(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        import math
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        new = new.sort_values([ts_col, tiebreak], kind="mergesort")
-        if state.exists:
-            n, t, q, cur_ts, cur_tb = state.get
-            n, t, q = int(n), int(t), int(q)
-        else:
-            n, t, q, cur_ts, cur_tb = 0, 0, 0, None, None
-        new_ts = pd.to_datetime(new[ts_col]).astype("int64") // 1000
-        new_tb = new[tiebreak].astype("int64")
-        if cur_ts is not None:
-            ok = (new_ts > cur_ts) | ((new_ts == cur_ts) & (new_tb > cur_tb))
-            new_ts, new_tb = new_ts[ok], new_tb[ok]
-        if len(new_ts) == 0:
-            if idle_timeout is not None:
-                state.setTimeoutDuration(idle_timeout)
-            return
-        ts_list = [int(x) for x in new_ts.to_numpy()]
-        prev = int(cur_ts) if cur_ts is not None else None
-        for micros in ts_list:
-            if prev is not None:
-                gap = (micros - prev) // 1_000_000
-                n += 1
-                t += gap
-                q += gap * gap
-            prev = micros
-        state.update((n, t, q, ts_list[-1], int(new_tb.iloc[-1])))
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
-        if n == 0:
-            return
-        root = math.sqrt(float(n * q - t * t))
-        yield pd.DataFrame(
-            [
-                {
-                    **{c: key[i] for i, c in enumerate(series)},
-                    "n_gaps": n,
-                    "mean_gap_s": py_round6(t / n),
-                    "std_gap_s": py_round6(root / n),
-                    "cv": py_round6(root / t) if t > 0 else None,
-                    "burstiness": (
-                        py_round6((root - float(t)) / (root + float(t)))
-                        if root + float(t) > 0
-                        else None
-                    ),
-                }
-            ]
-        )
-
-    return stream_df.groupBy(*series).applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+        ],
+        [
+            StructField("n_gaps", LongType()),
+            StructField("mean_gap_s", DoubleType()),
+            StructField("std_gap_s", DoubleType()),
+            StructField("cv", DoubleType()),
+            StructField("burstiness", DoubleType()),
+        ],
+        fold,
+        init=(0, 0, 0, None, None),
+        order=[ts_col, tiebreak],
+        idle_timeout=idle_timeout,
     )
 
 
@@ -1544,70 +1101,17 @@ def stream_record_stats(
     Records are inherently ONLINE — the detector is just (current max,
     current min, two counters, n), all exact int64, so the stream twin
     carries no approximation at all; the cross-batch boundary is the
-    same comparison as any other step.  Rows at or behind the
-    (ts, tiebreak) cursor are dropped (stream_detect contract); NaN
-    rows are skipped exactly like the batch NULL filter.
+    same comparison as any other step.  NaN rows are skipped exactly
+    like the batch NULL filter. Late rows and ``idle_timeout``: the
+    :mod:`~tsod_spark.streaming._fold` contract.
     """
-    import math
-
-    import numpy as np
-
     from ..queries.round8 import _EULER_GAMMA
 
-    series = list(series)
-    key_fields = [stream_df.schema[c] for c in series]
-    out_schema = StructType(
-        key_fields
-        + [
-            StructField("n_obs", LongType()),
-            StructField("hi_records", LongType()),
-            StructField("lo_records", LongType()),
-            StructField("expected_records", DoubleType()),
-            StructField("hi_ratio", DoubleType()),
-            StructField("lo_ratio", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("n", LongType()),
-            StructField("hi", LongType()),
-            StructField("lo", LongType()),
-            StructField("mx", LongType()),
-            StructField("mn", LongType()),
-            StructField("seen", BooleanType()),
-            StructField("cur_ts", LongType()),
-            StructField("cur_tb", LongType()),
-        ]
-    )
-
-    def process(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        new = new.sort_values([ts_col, tiebreak], kind="mergesort")
-        if state.exists:
-            n, hi, lo, mx, mn, seen, cur_ts, cur_tb = state.get
-            n, hi, lo = int(n), int(hi), int(lo)
-        else:
-            n, hi, lo, mx, mn, seen, cur_ts, cur_tb = 0, 0, 0, 0, 0, False, None, None
-        new_ts = pd.to_datetime(new[ts_col]).astype("int64") // 1000
-        new_tb = new[tiebreak].astype("int64")
-        if cur_ts is not None:
-            ok = (new_ts > cur_ts) | ((new_ts == cur_ts) & (new_tb > cur_tb))
-            new = new[ok.to_numpy()]
-            new_ts, new_tb = new_ts[ok], new_tb[ok]
-        if len(new) == 0:
-            if idle_timeout is not None:
-                state.setTimeoutDuration(idle_timeout)
-            return
+    def fold(key, new, st):
+        n, hi, lo, mx, mn, seen = st
+        n, hi, lo = int(n), int(hi), int(lo)
         v = new[value_col].astype(float).to_numpy()
-        obs = ~np.isnan(v)
-        av = np.abs(v[obs]) * 100
-        cents = (np.sign(v[obs]) * np.floor(av + 0.5)).astype("int64")
-        for c in cents:
+        for c in cents_array(v[~np.isnan(v)]).astype("int64"):
             c = int(c)
             if not seen:
                 # the first observation is both a record high and low
@@ -1624,39 +1128,46 @@ def stream_record_stats(
                     lo += 1
                     mn = c
             n += 1
-        state.update(
-            (n, hi, lo, int(mx), int(mn), bool(seen), int(new_ts.iloc[-1]), int(new_tb.iloc[-1]))
-        )
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
+        st = (n, hi, lo, int(mx), int(mn), bool(seen))
         if n == 0:
-            return
+            return st, None
         nd = float(n)
         exp_rec = math.log(nd) + float(_EULER_GAMMA) + 1.0 / (2.0 * nd)
-        yield pd.DataFrame(
-            [
-                {
-                    **{c: key[i] for i, c in enumerate(series)},
-                    "n_obs": n,
-                    "hi_records": hi,
-                    "lo_records": lo,
-                    "expected_records": py_round6(exp_rec),
-                    "hi_ratio": py_round6(hi / exp_rec),
-                    "lo_ratio": py_round6(lo / exp_rec),
-                }
-            ]
-        )
+        return st, [
+            {
+                "n_obs": n,
+                "hi_records": hi,
+                "lo_records": lo,
+                "expected_records": py_round6(exp_rec),
+                "hi_ratio": py_round6(hi / exp_rec),
+                "lo_ratio": py_round6(lo / exp_rec),
+            }
+        ]
 
-    return stream_df.groupBy(*series).applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return keyed_fold(
+        stream_df,
+        series,
+        [
+            StructField("n", LongType()),
+            StructField("hi", LongType()),
+            StructField("lo", LongType()),
+            StructField("mx", LongType()),
+            StructField("mn", LongType()),
+            StructField("seen", BooleanType()),
+        ],
+        [
+            StructField("n_obs", LongType()),
+            StructField("hi_records", LongType()),
+            StructField("lo_records", LongType()),
+            StructField("expected_records", DoubleType()),
+            StructField("hi_ratio", DoubleType()),
+            StructField("lo_ratio", DoubleType()),
+        ],
+        fold,
+        init=(0, 0, 0, 0, 0, False),
+        order=[ts_col, tiebreak],
+        cursor=(ts_col, tiebreak),
+        idle_timeout=idle_timeout,
     )
 
 
@@ -1684,94 +1195,42 @@ def stream_markov_counts(
     structure), so a periodic batch read of the changelog reproduces
     events_markov bit-for-bit.
     """
-    series = list(series)
-    key_fields = [stream_df.schema[c] for c in series]
-    out_schema = StructType(
-        key_fields
-        + [
-            StructField("from_type", StringType()),
-            StructField("to_type", StringType()),
-            StructField("transitions", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("last", StringType()),
-            StructField("froms", ArrayType(StringType())),
-            StructField("tos", ArrayType(StringType())),
-            StructField("cnts", ArrayType(LongType())),
-            StructField("cur_ts", LongType()),
-            StructField("cur_tb", LongType()),
-        ]
-    )
 
-    def process(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        new = new.sort_values([ts_col, tiebreak], kind="mergesort")
-        if state.exists:
-            last, froms, tos, cnts, cur_ts, cur_tb = state.get
-            counts = {
-                (f, t): int(c) for f, t, c in zip(list(froms), list(tos), list(cnts))
-            }
-        else:
-            last, counts, cur_ts, cur_tb = None, {}, None, None
-        new_ts = pd.to_datetime(new[ts_col]).astype("int64") // 1000
-        new_tb = new[tiebreak].astype("int64")
-        if cur_ts is not None:
-            ok = (new_ts > cur_ts) | ((new_ts == cur_ts) & (new_tb > cur_tb))
-            new = new[ok.to_numpy()]
-            new_ts, new_tb = new_ts[ok], new_tb[ok]
-        if len(new) == 0:
-            if idle_timeout is not None:
-                state.setTimeoutDuration(idle_timeout)
-            return
+    def fold(key, new, st):
+        last, froms, tos, cnts = st
+        counts = {(f, t): int(c) for f, t, c in zip(list(froms), list(tos), list(cnts))}
         added = False
         for t in new[type_col].astype(str):
             if last is not None:
                 counts[(last, t)] = counts.get((last, t), 0) + 1
                 added = True
             last = t
-        state.update(
-            (
-                last,
-                [f for f, _ in counts],
-                [t for _, t in counts],
-                [counts[k] for k in counts],
-                int(new_ts.iloc[-1]),
-                int(new_tb.iloc[-1]),
-            )
-        )
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
+        st = (last, [f for f, _ in counts], [t for _, t in counts], [counts[k] for k in counts])
         if not added:
-            return
-        yield pd.DataFrame(
-            [
-                {
-                    **{c: key[i] for i, c in enumerate(series)},
-                    "from_type": f,
-                    "to_type": t,
-                    "transitions": c,
-                }
-                for (f, t), c in counts.items()
-            ]
-        )
+            return st, None
+        return st, [
+            {"from_type": f, "to_type": t, "transitions": c} for (f, t), c in counts.items()
+        ]
 
-    return stream_df.groupBy(*series).applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return keyed_fold(
+        stream_df,
+        series,
+        [
+            StructField("last", StringType()),
+            StructField("froms", ArrayType(StringType())),
+            StructField("tos", ArrayType(StringType())),
+            StructField("cnts", ArrayType(LongType())),
+        ],
+        [
+            StructField("from_type", StringType()),
+            StructField("to_type", StringType()),
+            StructField("transitions", LongType()),
+        ],
+        fold,
+        init=(None, (), (), ()),
+        order=[ts_col, tiebreak],
+        cursor=(ts_col, tiebreak),
+        idle_timeout=idle_timeout,
     )
 
 
@@ -1797,49 +1256,13 @@ def stream_permutation_entropy(
     rule).  Entropy derives fresh from the exact counts per emission —
     the count-moment identity, no float state.
     """
-    import math
 
-    import numpy as np
-
-    series = list(series)
-    key_fields = [stream_df.schema[c] for c in series]
-    out_schema = StructType(
-        key_fields
-        + [
-            StructField("n_triples", LongType()),
-            StructField("k_patterns", LongType()),
-            StructField("pe_nats", DoubleType()),
-            StructField("pe_norm", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("pend_hb", LongType()),
-            StructField("pend_sum", LongType()),
-            StructField("hbs", ArrayType(LongType())),   # last 2 closed hours
-            StructField("ys", ArrayType(LongType())),    # their cent sums
-            StructField("pats", ArrayType(LongType())),
-            StructField("cnts", ArrayType(LongType())),
-        ]
-    )
-
-    def process(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        new = new.sort_values([ts_col], kind="mergesort")
-        if state.exists:
-            pend_hb, pend_sum, hbs, ys, pats, cnts = state.get
-            hist = list(zip([int(h) for h in hbs], [int(y) for y in ys]))
-            counts = {int(p): int(c) for p, c in zip(list(pats), list(cnts))}
-        else:
-            pend_hb, pend_sum, hist, counts = None, 0, [], {}
-
-        def close(hb0: int, y0: int) -> None:
-            nonlocal hist
+    def fold(key, new, st):
+        pend_hb, pend_sum, hbs, ys, pats, cnts = st
+        hist = list(zip([int(h) for h in hbs], [int(y) for y in ys]))
+        counts = {int(p): int(c) for p, c in zip(list(pats), list(cnts))}
+        closed, pend_hb, pend_sum = _close_hours(new, ts_col, value_col, pend_hb, pend_sum)
+        for hb0, y0 in closed:
             if len(hist) == 2 and hist[0][0] == hb0 - 2 and hist[1][0] == hb0 - 1:
                 x = [hist[0][1], hist[1][1], y0]
                 r1 = (x[1] < x[0]) + (x[2] < x[0])
@@ -1848,64 +1271,49 @@ def stream_permutation_entropy(
                 p = 9 * r1 + 3 * r2 + r3
                 counts[p] = counts.get(p, 0) + 1
             hist = (hist + [(hb0, y0)])[-2:]
-
-        new_ts = pd.to_datetime(new[ts_col]).astype("int64") // 1000
-        vals = new[value_col].astype(float).to_numpy()
-        hbs_arr = (new_ts // 3_600_000_000).to_numpy()
-        for y, hb in zip(vals, hbs_arr):
-            if math.isnan(y):
-                continue
-            hb = int(hb)
-            # half-away-from-zero, matching F.round in the batch twin
-            c = (-1 if y < 0 else 1) * int(np.floor(abs(y) * 100 + 0.5))
-            if pend_hb is None:
-                pend_hb, pend_sum = hb, c
-            elif hb == pend_hb:
-                pend_sum += c
-            elif hb > pend_hb:
-                close(int(pend_hb), int(pend_sum))
-                pend_hb, pend_sum = hb, c
-            # hb < pend_hb: late row behind the open bucket — dropped
-            # (bound disorder upstream with withWatermark)
-        state.update(
-            (
-                int(pend_hb) if pend_hb is not None else None,
-                int(pend_sum),
-                [h for h, _ in hist],
-                [y for _, y in hist],
-                list(counts.keys()),
-                list(counts.values()),
-            )
+        st = (
+            int(pend_hb) if pend_hb is not None else None,
+            int(pend_sum),
+            [h for h, _ in hist],
+            [y for _, y in hist],
+            list(counts.keys()),
+            list(counts.values()),
         )
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
         n = sum(counts.values())
         if n == 0:
-            return
+            return st, None
         k = len(counts)
         h = math.log(n) - sum(c * math.log(c) for c in counts.values()) / n
-        yield pd.DataFrame(
-            [
-                {
-                    **{c: key[i] for i, c in enumerate(series)},
-                    "n_triples": n,
-                    "k_patterns": k,
-                    "pe_nats": py_round6(h),
-                    "pe_norm": py_round6(h / math.log(6.0)),
-                }
-            ]
-        )
+        return st, [
+            {
+                "n_triples": n,
+                "k_patterns": k,
+                "pe_nats": py_round6(h),
+                "pe_norm": py_round6(h / math.log(6.0)),
+            }
+        ]
 
-    return stream_df.groupBy(*series).applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return keyed_fold(
+        stream_df,
+        series,
+        [
+            StructField("pend_hb", LongType()),
+            StructField("pend_sum", LongType()),
+            StructField("hbs", ArrayType(LongType())),  # last 2 closed hours
+            StructField("ys", ArrayType(LongType())),  # their cent sums
+            StructField("pats", ArrayType(LongType())),
+            StructField("cnts", ArrayType(LongType())),
+        ],
+        [
+            StructField("n_triples", LongType()),
+            StructField("k_patterns", LongType()),
+            StructField("pe_nats", DoubleType()),
+            StructField("pe_norm", DoubleType()),
+        ],
+        fold,
+        init=(None, 0, (), (), (), ()),
+        order=[ts_col],
+        idle_timeout=idle_timeout,
     )
 
 
@@ -1945,56 +1353,16 @@ def stream_periodogram(
     this); the emitted flag is always internally consistent with the
     emitted rounded powers.
     """
-    import math
-
-    series = list(series)
     plist = [int(p) for p in periods]
-    key_fields = [stream_df.schema[c] for c in series]
-    out_schema = StructType(
-        key_fields
-        + [
-            StructField("period", LongType()),
-            StructField("n_hours", LongType()),
-            StructField("power", DoubleType()),
-            StructField("power_share", DoubleType()),
-            StructField("is_dominant", BooleanType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("pend_hb", LongType()),
-            StructField("pend_sum", LongType()),
-            StructField("n", LongType()),
-            StructField("t", LongType()),
-            StructField("q", LongType()),
-            StructField("yc", ArrayType(DoubleType())),
-            StructField("cs", ArrayType(DoubleType())),
-            StructField("ys", ArrayType(DoubleType())),
-            StructField("sn", ArrayType(DoubleType())),
-        ]
-    )
+    k = len(plist)
     two_pi = 2 * math.pi
 
-    def process(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        new = new.sort_values([ts_col], kind="mergesort")
-        k = len(plist)
-        if state.exists:
-            pend_hb, pend_sum, n, t, q, yc, cs, ys, sn = state.get
-            n, t, q = int(n), int(t), int(q)
-            yc, cs, ys, sn = (list(map(float, a)) for a in (yc, cs, ys, sn))
-        else:
-            pend_hb, pend_sum = None, 0
-            n = t = q = 0
-            yc, cs, ys, sn = [0.0] * k, [0.0] * k, [0.0] * k, [0.0] * k
-
-        def close(hb0: int, y0: int) -> None:
-            nonlocal n, t, q
+    def fold(key, new, st):
+        pend_hb, pend_sum, n, t, q, *sums = st
+        n, t, q = int(n), int(t), int(q)
+        yc, cs, ys, sn = (list(map(float, a)) for a in sums)
+        closed, pend_hb, pend_sum = _close_hours(new, ts_col, value_col, pend_hb, pend_sum)
+        for hb0, y0 in closed:
             n += 1
             t += y0
             q += y0 * y0
@@ -2005,44 +1373,12 @@ def stream_periodogram(
                 cs[i] += c
                 ys[i] += y0 * s2
                 sn[i] += s2
-
-        new_ts = pd.to_datetime(new[ts_col]).astype("int64") // 1000
-        vals = new[value_col].astype(float).to_numpy()
-        hbs_arr = (new_ts // 3_600_000_000).to_numpy()
-        closed_any = False
-        for y, hb in zip(vals, hbs_arr):
-            if math.isnan(y):
-                continue
-            hb = int(hb)
-            c = (-1 if y < 0 else 1) * int(math.floor(abs(y) * 100 + 0.5))
-            if pend_hb is None:
-                pend_hb, pend_sum = hb, c
-            elif hb == pend_hb:
-                pend_sum += c
-            elif hb > pend_hb:
-                close(int(pend_hb), int(pend_sum))
-                closed_any = True
-                pend_hb, pend_sum = hb, c
-        state.update(
-            (
-                int(pend_hb) if pend_hb is not None else None,
-                int(pend_sum),
-                n,
-                t,
-                q,
-                yc,
-                cs,
-                ys,
-                sn,
-            )
-        )
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
-        if not closed_any or n == 0:
-            return
+        st = (int(pend_hb) if pend_hb is not None else None, int(pend_sum), n, t, q, yc, cs, ys, sn)
+        if not closed or n == 0:
+            return st, None
         var = (q - (t * t) / n) / n
         if var <= 0:
-            return
+            return st, None
         mu, sd = t / n, math.sqrt(var)
         powers = []
         for i, p in enumerate(plist):
@@ -2053,30 +1389,92 @@ def stream_periodogram(
         dom = min(
             range(k), key=lambda i: (-powers[i], plist[i])
         )  # rounded powers, ties to shorter period — the batch rule
-        yield pd.DataFrame(
-            [
-                {
-                    **{c: key[j] for j, c in enumerate(series)},
-                    "period": plist[i],
-                    "n_hours": n,
-                    "power": powers[i],
-                    "power_share": py_round6(powers[i] / tot) if tot > 0 else None,
-                    "is_dominant": i == dom,
-                }
-                for i in range(k)
-            ]
-        )
+        return st, [
+            {
+                "period": plist[i],
+                "n_hours": n,
+                "power": powers[i],
+                "power_share": py_round6(powers[i] / tot) if tot > 0 else None,
+                "is_dominant": i == dom,
+            }
+            for i in range(k)
+        ]
 
-    return stream_df.groupBy(*series).applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return keyed_fold(
+        stream_df,
+        series,
+        [
+            StructField("pend_hb", LongType()),
+            StructField("pend_sum", LongType()),
+            StructField("n", LongType()),
+            StructField("t", LongType()),
+            StructField("q", LongType()),
+            StructField("yc", ArrayType(DoubleType())),
+            StructField("cs", ArrayType(DoubleType())),
+            StructField("ys", ArrayType(DoubleType())),
+            StructField("sn", ArrayType(DoubleType())),
+        ],
+        [
+            StructField("period", LongType()),
+            StructField("n_hours", LongType()),
+            StructField("power", DoubleType()),
+            StructField("power_share", DoubleType()),
+            StructField("is_dominant", BooleanType()),
+        ],
+        fold,
+        init=(None, 0, 0, 0, 0) + ((0.0,) * k,) * 4,
+        order=[ts_col],
+        idle_timeout=idle_timeout,
+    )
+
+
+def _conformal_monitor(stream_df, series, ts_col, value_col, idle_timeout, out_fields, emit):
+    """Shared state of the conformal monitors: the open hourly bucket,
+    a 24-hour ring of recent closed buckets, and the calibration and
+    test residual multisets. ``emit(cal, test)`` gives the rows of a
+    micro-batch that closed at least one bucket."""
+
+    def fold(key, new, st):
+        pend_hb, pend_sum, rhbs, rxs, cal, test = st
+        recent = dict(zip([int(h) for h in rhbs], [int(x) for x in rxs]))
+        cal = [int(v) for v in cal]
+        test = [int(v) for v in test]
+        closed, pend_hb, pend_sum = _close_hours(new, ts_col, value_col, pend_hb, pend_sum)
+        for hb0, x0 in closed:
+            prev = recent.get(hb0 - 24)
+            if prev is not None:
+                (test if hb0 % 5 == 0 else cal).append(abs(x0 - prev))
+            recent[hb0] = x0
+            # future closes are > hb0 and need lookups >= hb0 - 23
+            for k2 in [k3 for k3 in recent if k3 < hb0 - 23]:
+                del recent[k2]
+        rh = sorted(recent)
+        st = (
+            int(pend_hb) if pend_hb is not None else None,
+            int(pend_sum),
+            rh,
+            [recent[h] for h in rh],
+            cal,
+            test,
+        )
+        return st, emit(cal, test) if closed else None
+
+    return keyed_fold(
+        stream_df,
+        series,
+        [
+            StructField("pend_hb", LongType()),
+            StructField("pend_sum", LongType()),
+            StructField("rhbs", ArrayType(LongType())),
+            StructField("rxs", ArrayType(LongType())),
+            StructField("cal", ArrayType(LongType())),
+            StructField("test", ArrayType(LongType())),
+        ],
+        out_fields,
+        fold,
+        init=(None, 0, (), (), (), ()),
+        order=[ts_col],
+        idle_timeout=idle_timeout,
     )
 
 
@@ -2125,123 +1523,39 @@ def stream_conformal_snaive(
     (py_round6 — the F.round twin). Null/NaN values contribute nothing
     to buckets, like the batch ``sum`` + ``isNotNull`` gate.
     """
-    import math  # noqa: PLC0415
 
-    series = list(series)
-    key_fields = [stream_df.schema[c] for c in series]
-    out_schema = StructType(
-        key_fields
-        + [
+    def emit(cal, test):
+        n_cal = len(cal)
+        k = ((n_cal + 1) * 8 + 9) // 10
+        if n_cal == 0 or k > n_cal:
+            return None  # refuse to certify: too few calibration residuals
+        qhat = sorted(cal)[k - 1]
+        n_test = len(test)
+        cov = sum(1 for v in test if v <= qhat)
+        return [
+            {
+                "n_cal": n_cal,
+                "qhat_cents": qhat,
+                "n_test": n_test,
+                "n_flagged": n_test - cov,
+                "coverage": py_round6(cov / n_test) if n_test > 0 else None,
+            }
+        ]
+
+    return _conformal_monitor(
+        stream_df,
+        series,
+        ts_col,
+        value_col,
+        idle_timeout,
+        [
             StructField("n_cal", LongType()),
             StructField("qhat_cents", LongType()),
             StructField("n_test", LongType()),
             StructField("n_flagged", LongType()),
             StructField("coverage", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("pend_hb", LongType()),
-            StructField("pend_sum", LongType()),
-            StructField("rhbs", ArrayType(LongType())),
-            StructField("rxs", ArrayType(LongType())),
-            StructField("cal", ArrayType(LongType())),
-            StructField("test", ArrayType(LongType())),
-        ]
-    )
-
-    def process(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        new = new.sort_values([ts_col], kind="mergesort")
-        if state.exists:
-            pend_hb, pend_sum, rhbs, rxs, cal, test = state.get
-            recent = dict(zip([int(h) for h in rhbs], [int(x) for x in rxs]))
-            cal = [int(v) for v in cal]
-            test = [int(v) for v in test]
-        else:
-            pend_hb, pend_sum = None, 0
-            recent = {}
-            cal, test = [], []
-
-        closed_any = False
-
-        def close(hb0: int, x0: int) -> None:
-            nonlocal closed_any
-            closed_any = True
-            prev = recent.get(hb0 - 24)
-            if prev is not None:
-                resid = abs(x0 - prev)
-                (test if hb0 % 5 == 0 else cal).append(resid)
-            recent[hb0] = x0
-            # future closes are > hb0 and need lookups >= hb0 - 23
-            for k2 in [k3 for k3 in recent if k3 < hb0 - 23]:
-                del recent[k2]
-
-        new_ts = pd.to_datetime(new[ts_col]).astype("int64") // 1000
-        vals = new[value_col].astype(float).to_numpy()
-        hbs_arr = (new_ts // 3_600_000_000).to_numpy()
-        for y, hb in zip(vals, hbs_arr):
-            if math.isnan(y):
-                continue
-            hb = int(hb)
-            c = (-1 if y < 0 else 1) * int(math.floor(abs(y) * 100 + 0.5))
-            if pend_hb is None:
-                pend_hb, pend_sum = hb, c
-            elif hb == pend_hb:
-                pend_sum += c
-            elif hb > pend_hb:
-                close(int(pend_hb), int(pend_sum))
-                pend_hb, pend_sum = hb, c
-        rh = sorted(recent)
-        state.update(
-            (
-                int(pend_hb) if pend_hb is not None else None,
-                int(pend_sum),
-                rh,
-                [recent[h] for h in rh],
-                cal,
-                test,
-            )
-        )
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
-        if not closed_any:
-            return
-        n_cal = len(cal)
-        k = ((n_cal + 1) * 8 + 9) // 10
-        if n_cal == 0 or k > n_cal:
-            return  # refuse to certify: too few calibration residuals
-        qhat = sorted(cal)[k - 1]
-        n_test = len(test)
-        cov = sum(1 for v in test if v <= qhat)
-        yield pd.DataFrame(
-            [
-                {
-                    **{c2: key[i] for i, c2 in enumerate(series)},
-                    "n_cal": n_cal,
-                    "qhat_cents": qhat,
-                    "n_test": n_test,
-                    "n_flagged": n_test - cov,
-                    "coverage": py_round6(cov / n_test) if n_test > 0 else None,
-                }
-            ]
-        )
-
-    return stream_df.groupBy(*series).applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+        ],
+        emit,
     )
 
 
@@ -2309,99 +1623,14 @@ def stream_conformal_curve(
     quantile VALUE is tie-order independent, coverage rounds through
     py_round6 (the F.round twin).
     """
-    import math  # noqa: PLC0415
-
-    series = list(series)
     alphas = [int(a) for a in alphas]
     if any(not 0 < a < 100 for a in alphas):
         raise ValueError(f"alphas must be integer percents in (0, 100): {alphas}")
-    key_fields = [stream_df.schema[c] for c in series]
-    out_schema = StructType(
-        key_fields
-        + [
-            StructField("alpha_pct", LongType()),
-            StructField("n_cal", LongType()),
-            StructField("qhat_cents", LongType()),
-            StructField("n_test", LongType()),
-            StructField("n_flagged", LongType()),
-            StructField("coverage", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("pend_hb", LongType()),
-            StructField("pend_sum", LongType()),
-            StructField("rhbs", ArrayType(LongType())),
-            StructField("rxs", ArrayType(LongType())),
-            StructField("cal", ArrayType(LongType())),
-            StructField("test", ArrayType(LongType())),
-        ]
-    )
 
-    def process(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        new = new.sort_values([ts_col], kind="mergesort")
-        if state.exists:
-            pend_hb, pend_sum, rhbs, rxs, cal, test = state.get
-            recent = dict(zip([int(h) for h in rhbs], [int(x) for x in rxs]))
-            cal = [int(v) for v in cal]
-            test = [int(v) for v in test]
-        else:
-            pend_hb, pend_sum = None, 0
-            recent = {}
-            cal, test = [], []
-
-        closed_any = False
-
-        def close(hb0: int, x0: int) -> None:
-            nonlocal closed_any
-            closed_any = True
-            prev = recent.get(hb0 - 24)
-            if prev is not None:
-                resid = abs(x0 - prev)
-                (test if hb0 % 5 == 0 else cal).append(resid)
-            recent[hb0] = x0
-            for k2 in [k3 for k3 in recent if k3 < hb0 - 23]:
-                del recent[k2]
-
-        new_ts = pd.to_datetime(new[ts_col]).astype("int64") // 1000
-        vals = new[value_col].astype(float).to_numpy()
-        hbs_arr = (new_ts // 3_600_000_000).to_numpy()
-        for y, hb in zip(vals, hbs_arr):
-            if math.isnan(y):
-                continue
-            hb = int(hb)
-            c = (-1 if y < 0 else 1) * int(math.floor(abs(y) * 100 + 0.5))
-            if pend_hb is None:
-                pend_hb, pend_sum = hb, c
-            elif hb == pend_hb:
-                pend_sum += c
-            elif hb > pend_hb:
-                close(int(pend_hb), int(pend_sum))
-                pend_hb, pend_sum = hb, c
-        rh = sorted(recent)
-        state.update(
-            (
-                int(pend_hb) if pend_hb is not None else None,
-                int(pend_sum),
-                rh,
-                [recent[h] for h in rh],
-                cal,
-                test,
-            )
-        )
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
-        if not closed_any:
-            return
+    def emit(cal, test):
         n_cal = len(cal)
         if n_cal == 0:
-            return
+            return None
         scal = sorted(cal)
         n_test = len(test)
         rows = []
@@ -2413,7 +1642,6 @@ def stream_conformal_curve(
             cov = sum(1 for v in test if v <= qhat)
             rows.append(
                 {
-                    **{c2: key[i] for i, c2 in enumerate(series)},
                     "alpha_pct": a,
                     "n_cal": n_cal,
                     "qhat_cents": qhat,
@@ -2422,19 +1650,23 @@ def stream_conformal_curve(
                     "coverage": py_round6(cov / n_test) if n_test > 0 else None,
                 }
             )
-        if rows:
-            yield pd.DataFrame(rows)
+        return rows or None
 
-    return stream_df.groupBy(*series).applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _conformal_monitor(
+        stream_df,
+        series,
+        ts_col,
+        value_col,
+        idle_timeout,
+        [
+            StructField("alpha_pct", LongType()),
+            StructField("n_cal", LongType()),
+            StructField("qhat_cents", LongType()),
+            StructField("n_test", LongType()),
+            StructField("n_flagged", LongType()),
+            StructField("coverage", DoubleType()),
+        ],
+        emit,
     )
 
 
@@ -2471,83 +1703,25 @@ def stream_sax(
     (count desc, word) tie order, and py_round6 shares. Variance-0
     series emit nothing (no shape information).
     """
-    import math  # noqa: PLC0415
-
     brk = 0.6744897501960817  # exact N(0,1) quartile — _SAX_BRK literal
-    series = list(series)
-    key_fields = [stream_df.schema[c] for c in series]
-    out_schema = StructType(
-        key_fields
-        + [
-            StructField("n_hours", LongType()),
-            StructField("rank", LongType()),
-            StructField("word", StringType()),
-            StructField("n_word", LongType()),
-            StructField("share", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("pend_hb", LongType()),
-            StructField("pend_sum", LongType()),
-            StructField("hbs", ArrayType(LongType())),
-            StructField("ys", ArrayType(LongType())),
-        ]
-    )
 
-    def process(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        new = new.sort_values([ts_col], kind="mergesort")
-        if state.exists:
-            pend_hb, pend_sum, hbs, ys = state.get
-            hbs = [int(h) for h in hbs]
-            ys = [int(v) for v in ys]
-        else:
-            pend_hb, pend_sum = None, 0
-            hbs, ys = [], []
-
-        closed_any = False
-        new_ts = pd.to_datetime(new[ts_col]).astype("int64") // 1000
-        vals = new[value_col].astype(float).to_numpy()
-        hbs_arr = (new_ts // 3_600_000_000).to_numpy()
-        for y, hb in zip(vals, hbs_arr):
-            if math.isnan(y):
-                continue
-            hb = int(hb)
-            c = (-1 if y < 0 else 1) * int(math.floor(abs(y) * 100 + 0.5))
-            if pend_hb is None:
-                pend_hb, pend_sum = hb, c
-            elif hb == pend_hb:
-                pend_sum += c
-            elif hb > pend_hb:
-                hbs.append(int(pend_hb))
-                ys.append(int(pend_sum))
-                closed_any = True
-                pend_hb, pend_sum = hb, c
-        state.update(
-            (
-                int(pend_hb) if pend_hb is not None else None,
-                int(pend_sum),
-                hbs,
-                ys,
-            )
-        )
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
+    def fold(key, new, st):
+        pend_hb, pend_sum, hbs, ys = st
+        hbs = [int(h) for h in hbs]
+        ys = [int(v) for v in ys]
+        closed, pend_hb, pend_sum = _close_hours(new, ts_col, value_col, pend_hb, pend_sum)
+        hbs += [h for h, _ in closed]
+        ys += [y for _, y in closed]
+        st = (int(pend_hb) if pend_hb is not None else None, int(pend_sum), hbs, ys)
         n = len(ys)
-        if not closed_any or n == 0:
-            return
+        if not closed or n == 0:
+            return st, None
         nd = float(n)
         td = float(sum(ys))
         qd = float(sum(v * v for v in ys))
         var = (qd - td * td / nd) / nd
         if var <= 0:
-            return
+            return st, None
         mu, sd = td / nd, math.sqrt(var)
         syms = []
         for v in ys:
@@ -2559,33 +1733,40 @@ def stream_sax(
                 w = syms[i] + syms[i + 1] + syms[i + 2]
                 counts[w] = counts.get(w, 0) + 1
         if not counts:
-            return
+            return st, None
         tot = sum(counts.values())
         ranked = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:top_k]
-        yield pd.DataFrame(
-            [
-                {
-                    **{c2: key[j] for j, c2 in enumerate(series)},
-                    "n_hours": n,
-                    "rank": r + 1,
-                    "word": w,
-                    "n_word": cnt,
-                    "share": py_round6(cnt / tot),
-                }
-                for r, (w, cnt) in enumerate(ranked)
-            ]
-        )
+        return st, [
+            {
+                "n_hours": n,
+                "rank": r + 1,
+                "word": w,
+                "n_word": cnt,
+                "share": py_round6(cnt / tot),
+            }
+            for r, (w, cnt) in enumerate(ranked)
+        ]
 
-    return stream_df.groupBy(*series).applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return keyed_fold(
+        stream_df,
+        series,
+        [
+            StructField("pend_hb", LongType()),
+            StructField("pend_sum", LongType()),
+            StructField("hbs", ArrayType(LongType())),
+            StructField("ys", ArrayType(LongType())),
+        ],
+        [
+            StructField("n_hours", LongType()),
+            StructField("rank", LongType()),
+            StructField("word", StringType()),
+            StructField("n_word", LongType()),
+            StructField("share", DoubleType()),
+        ],
+        fold,
+        init=(None, 0, (), ()),
+        order=[ts_col],
+        idle_timeout=idle_timeout,
     )
 
 
@@ -2620,7 +1801,6 @@ def stream_quality_budget(
 
     glist = [int(v) for v in grid]
     k = len(glist)
-    series = list(series)
     t = tokens(F.col(text_col))
     sw = F.array(*[F.lit(s) for s in STOPWORDS_EN])
     slim = stream_df.select(
@@ -2630,44 +1810,13 @@ def stream_quality_budget(
         .cast("long")
         .alias("__ns"),
     ).where(F.col("__nw") > 0)
-    key_fields = [slim.schema[c] for c in series]
-    out_schema = StructType(
-        key_fields
-        + [
-            StructField("thr_milli", LongType()),
-            StructField("n_docs_kept", LongType()),
-            StructField("n_tokens_kept", LongType()),
-            StructField("doc_share", DoubleType()),
-            StructField("token_share", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("nd", LongType()),
-            StructField("nt", LongType()),
-            StructField("docs", ArrayType(LongType())),
-            StructField("toks", ArrayType(LongType())),
-        ]
-    )
 
-    def process(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        if state.exists:
-            nd, nt, docs, toks = state.get
-            nd, nt = int(nd), int(nt)
-            docs = [int(v) for v in docs]
-            toks = [int(v) for v in toks]
-        else:
-            nd = nt = 0
-            docs, toks = [0] * k, [0] * k
-        for nw, ns in zip(
-            new["__nw"].astype("int64"), new["__ns"].astype("int64")
-        ):
+    def fold(key, new, st):
+        nd, nt, docs, toks = st
+        nd, nt = int(nd), int(nt)
+        docs = [int(v) for v in docs]
+        toks = [int(v) for v in toks]
+        for nw, ns in zip(new["__nw"].astype("int64"), new["__ns"].astype("int64")):
             nw, ns = int(nw), int(ns)
             nd += 1
             nt += nw
@@ -2675,35 +1824,37 @@ def stream_quality_budget(
                 if 1000 * ns >= thr * nw:
                     docs[i] += 1
                     toks[i] += nw
-        state.update((nd, nt, docs, toks))
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
-        yield pd.DataFrame(
-            [
-                {
-                    **{c: key[j] for j, c in enumerate(series)},
-                    "thr_milli": thr,
-                    "n_docs_kept": docs[i],
-                    "n_tokens_kept": toks[i],
-                    "doc_share": py_round6(docs[i] / nd),
-                    "token_share": py_round6(toks[i] / nt),
-                }
-                for i, thr in enumerate(glist)
-            ]
-        )
+        return (nd, nt, docs, toks), [
+            {
+                "thr_milli": thr,
+                "n_docs_kept": docs[i],
+                "n_tokens_kept": toks[i],
+                "doc_share": py_round6(docs[i] / nd),
+                "token_share": py_round6(toks[i] / nt),
+            }
+            for i, thr in enumerate(glist)
+        ]
 
-    return slim.groupBy(*series).applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return keyed_fold(
+        slim,
+        series,
+        [
+            StructField("nd", LongType()),
+            StructField("nt", LongType()),
+            StructField("docs", ArrayType(LongType())),
+            StructField("toks", ArrayType(LongType())),
+        ],
+        [
+            StructField("thr_milli", LongType()),
+            StructField("n_docs_kept", LongType()),
+            StructField("n_tokens_kept", LongType()),
+            StructField("doc_share", DoubleType()),
+            StructField("token_share", DoubleType()),
+        ],
+        fold,
+        init=(0, 0, (0,) * k, (0,) * k),
+        idle_timeout=idle_timeout,
     )
-
 
 
 def _check_ref_keys(ref_stats, seg_col) -> None:
@@ -2735,6 +1886,68 @@ def _check_ref_keys(ref_stats, seg_col) -> None:
                 "reference) but no seg_col was given — pass seg_col or "
                 "rebuild the reference without one"
             )
+
+
+def _drift_monitor(
+    stream_df, ref_stats, type_col, value_col, seg_col, idle_timeout, out_fields, score, *, deciles=False
+):
+    """Shared frame of the frozen-reference drift monitors (PSI, W1, KS).
+
+    ``ref_stats`` is ``{type: (bounds or cents, counts, n_ref)}``, keyed
+    by ``(type, segment)`` tuples when ``seg_col`` is given (checked
+    loudly by :func:`_check_ref_keys`). The stream keeps the current
+    window's counts: 10 decile-bucket counters against the reference
+    bounds (``deciles``), or one counter per distinct cent (a
+    ``{cent: count}`` map). ``score(counts, *ref)`` turns them into the
+    emitted row, or None. A key with no reference is not scored and
+    keeps no state. NaN/null values contribute nothing (the batch
+    ``vc IS NOT NULL`` gate).
+    """
+    _check_ref_keys(ref_stats, seg_col)
+    cast = float if deciles else int
+    ref = {
+        ((str(k[0]), k[1]) if seg_col else str(k)): (
+            [cast(b) for b in v[0]],
+            [int(c) for c in v[1]],
+            int(v[2]),
+        )
+        for k, v in ref_stats.items()
+    }
+    keys = [type_col] + ([seg_col] if seg_col else [])
+    key_fields = [StructField(type_col, StringType())] + (
+        [StructField(seg_col, stream_df.schema[seg_col].dataType)] if seg_col else []
+    )
+
+    def fold(key, new, st):
+        r = ref.get(tuple(key) if seg_col else key[0])
+        if r is None:
+            return None  # no reference: cannot score drift for this key
+        vcs = [cents(y) for y in new[value_col].astype(float) if not math.isnan(y)]
+        if deciles:
+            cur = [int(c) for c in st[0]]
+            for vc in vcs:
+                cur[min(1 + sum(1 for x in r[0] if float(vc) > x), 10) - 1] += 1
+            upd = (cur,)
+        else:
+            cur = dict(zip([int(x) for x in st[0]], [int(x) for x in st[1]]))
+            for vc in vcs:
+                cur[vc] = cur.get(vc, 0) + 1
+            ks = sorted(cur)
+            upd = ([int(x) for x in ks], [int(cur[x]) for x in ks])
+        row = score(cur, *r)
+        return upd, None if row is None else [{**dict(zip(keys, key)), **row}]
+
+    counts = StructField("counts", ArrayType(LongType()))
+    return keyed_fold(
+        stream_df,
+        keys,
+        [counts] if deciles else [StructField("cents", ArrayType(LongType())), counts],
+        key_fields + out_fields,
+        fold,
+        init=((0,) * 10,) if deciles else ((), ()),
+        idle_timeout=idle_timeout,
+        emit_keys=False,
+    )
 
 
 def stream_psi_drift(
@@ -2773,63 +1986,8 @@ def stream_psi_drift(
     segment column in the emission); per-key state stays 10 int64
     counters, segment-local reference deciles.
     """
-    import math  # noqa: PLC0415
 
-    seg_fields = (
-        [StructField(seg_col, stream_df.schema[seg_col].dataType)]
-        if seg_col
-        else []
-    )
-    out_schema = StructType(
-        [
-            StructField(type_col, StringType()),
-            *seg_fields,
-            StructField("n_ref", LongType()),
-            StructField("n_cur", LongType()),
-            StructField("psi", DoubleType()),
-            StructField("drift_flag", BooleanType()),
-        ]
-    )
-    state_schema = StructType([StructField("counts", ArrayType(LongType()))])
-
-    _check_ref_keys(ref_stats, seg_col)
-
-    def _norm(v):
-        return (
-            [float(b) for b in v[0]],
-            [int(c) for c in v[1]],
-            int(v[2]),
-        )
-
-    if seg_col:
-        ref = {(str(k[0]), k[1]): _norm(v) for k, v in ref_stats.items()}
-    else:
-        ref = {str(k): _norm(v) for k, v in ref_stats.items()}
-
-    def process(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        et = key[0]
-        lk = (key[0], key[1]) if seg_col else key[0]
-        if lk not in ref:
-            return  # no reference: cannot score drift for this key
-        bounds, ref_counts, n_ref = ref[lk]
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        counts = (
-            [int(c) for c in state.get[0]] if state.exists else [0] * 10
-        )
-        for y in new[value_col].astype(float):
-            if math.isnan(y):
-                continue
-            vc = (-1 if y < 0 else 1) * int(math.floor(abs(y) * 100 + 0.5))
-            b = 1 + sum(1 for x in bounds if float(vc) > x)
-            counts[min(b, 10) - 1] += 1
-        state.update((counts,))
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
+    def score(counts, bounds, ref_counts, n_ref):
         n_cur = sum(counts)
         acc_u = 0
         for i in range(10):
@@ -2845,30 +2003,23 @@ def stream_psi_drift(
             q = (counts[i] + 1) / (n_cur + 10)
             acc_u += int(math.floor((q - p) * math.log(q / p) * 1e9 + 0.5))
         psi = py_round6(acc_u / 1e9)
-        row = {type_col: et}
-        if seg_col:
-            row[seg_col] = key[1]
-        row.update(
-            {
-                "n_ref": n_ref,
-                "n_cur": n_cur,
-                "psi": psi,
-                "drift_flag": bool(psi > 0.2),
-            }
-        )
-        yield pd.DataFrame([row])
+        return {"n_ref": n_ref, "n_cur": n_cur, "psi": psi, "drift_flag": bool(psi > 0.2)}
 
-    group_cols = [type_col] + ([seg_col] if seg_col else [])
-    return stream_df.groupBy(*group_cols).applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _drift_monitor(
+        stream_df,
+        ref_stats,
+        type_col,
+        value_col,
+        seg_col,
+        idle_timeout,
+        [
+            StructField("n_ref", LongType()),
+            StructField("n_cur", LongType()),
+            StructField("psi", DoubleType()),
+            StructField("drift_flag", BooleanType()),
+        ],
+        score,
+        deciles=True,
     )
 
 
@@ -2914,75 +2065,13 @@ def stream_wasserstein_drift(
     Batch-equivalence vs events_wasserstein_drift_by_segment is
     tested the same way as the global twin.
     """
-    import math  # noqa: PLC0415
 
-    seg_fields = (
-        [StructField(seg_col, stream_df.schema[seg_col].dataType)]
-        if seg_col
-        else []
-    )
-    out_schema = StructType(
-        [
-            StructField(type_col, StringType()),
-            *seg_fields,
-            StructField("n_ref", LongType()),
-            StructField("n_cur", LongType()),
-            StructField("w1_value", DoubleType()),
-            StructField("w1_norm", DoubleType()),
-            StructField("drift_flag", BooleanType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("cents", ArrayType(LongType())),
-            StructField("counts", ArrayType(LongType())),
-        ]
-    )
-    _check_ref_keys(ref_stats, seg_col)
-
-    def _norm(v):
-        return (
-            [int(c) for c in v[0]],
-            [int(c) for c in v[1]],
-            int(v[2]),
-        )
-
-    if seg_col:
-        ref = {(str(t[0]), t[1]): _norm(v) for t, v in ref_stats.items()}
-    else:
-        ref = {str(t): _norm(v) for t, v in ref_stats.items()}
-
-    def process(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        et = key[0]
-        lk = (key[0], key[1]) if seg_col else key[0]
-        if lk not in ref:
-            return
-        rcents, rcounts, n_ref = ref[lk]
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        if state.exists:
-            sc, sn = state.get
-            cur = dict(zip([int(x) for x in sc], [int(x) for x in sn]))
-        else:
-            cur = {}
-        for y in new[value_col].astype(float):
-            if math.isnan(y):
-                continue
-            vc = (-1 if y < 0 else 1) * int(math.floor(abs(y) * 100 + 0.5))
-            cur[vc] = cur.get(vc, 0) + 1
-        ks = sorted(cur)
-        state.update(([int(x) for x in ks], [int(cur[x]) for x in ks]))
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
+    def score(cur, rcents, rcounts, n_ref):
         n_cur = sum(cur.values())
         rmap = dict(zip(rcents, rcounts))
         merged = sorted(set(rcents) | set(cur))
         if n_cur == 0 or n_ref == 0 or len(merged) < 2:
-            return
+            return None
         s = 0
         cumr = cumc = 0
         for i, v in enumerate(merged[:-1]):
@@ -2990,33 +2079,30 @@ def stream_wasserstein_drift(
             cumc += cur.get(v, 0)
             s += abs(cumr * n_cur - cumc * n_ref) * (merged[i + 1] - v)
         span = merged[-1] - merged[0]
-        w1 = py_round6(s / (n_ref * n_cur * 100.0))
         w1n = py_round6(s / (n_ref * n_cur * float(span)))
-        row = {type_col: et}
-        if seg_col:
-            row[seg_col] = key[1]
-        row.update(
-            {
-                "n_ref": n_ref,
-                "n_cur": n_cur,
-                "w1_value": w1,
-                "w1_norm": w1n,
-                "drift_flag": bool(w1n > flag_norm),
-            }
-        )
-        yield pd.DataFrame([row])
+        return {
+            "n_ref": n_ref,
+            "n_cur": n_cur,
+            "w1_value": py_round6(s / (n_ref * n_cur * 100.0)),
+            "w1_norm": w1n,
+            "drift_flag": bool(w1n > flag_norm),
+        }
 
-    group_cols = [type_col] + ([seg_col] if seg_col else [])
-    return stream_df.groupBy(*group_cols).applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _drift_monitor(
+        stream_df,
+        ref_stats,
+        type_col,
+        value_col,
+        seg_col,
+        idle_timeout,
+        [
+            StructField("n_ref", LongType()),
+            StructField("n_cur", LongType()),
+            StructField("w1_value", DoubleType()),
+            StructField("w1_norm", DoubleType()),
+            StructField("drift_flag", BooleanType()),
+        ],
+        score,
     )
 
 
@@ -3062,70 +2148,11 @@ def stream_ks_drift(
     (tuple-keyed ``ref_stats``, segment column in the emission,
     per-key state unchanged).
     """
-    import math  # noqa: PLC0415
 
-    seg_fields = (
-        [StructField(seg_col, stream_df.schema[seg_col].dataType)]
-        if seg_col
-        else []
-    )
-    out_schema = StructType(
-        [
-            StructField(type_col, StringType()),
-            *seg_fields,
-            StructField("n_ref", LongType()),
-            StructField("n_cur", LongType()),
-            StructField("ks", DoubleType()),
-            StructField("ks_at_cent", LongType()),
-            StructField("drift_flag", BooleanType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("cents", ArrayType(LongType())),
-            StructField("counts", ArrayType(LongType())),
-        ]
-    )
-
-    _check_ref_keys(ref_stats, seg_col)
-
-    def _norm(v):
-        return ([int(c) for c in v[0]], [int(c) for c in v[1]], int(v[2]))
-
-    if seg_col:
-        ref = {(str(t[0]), t[1]): _norm(v) for t, v in ref_stats.items()}
-    else:
-        ref = {str(t): _norm(v) for t, v in ref_stats.items()}
-
-    def process(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        et = key[0]
-        lk = (key[0], key[1]) if seg_col else key[0]
-        if lk not in ref:
-            return
-        rcents, rcounts, n_ref = ref[lk]
-        new = pd.concat(list(pdfs), ignore_index=True) if pdfs else pd.DataFrame()
-        if len(new) == 0:
-            return
-        if state.exists:
-            sc, sn = state.get
-            cur = dict(zip([int(x) for x in sc], [int(x) for x in sn]))
-        else:
-            cur = {}
-        for y in new[value_col].astype(float):
-            if math.isnan(y):
-                continue
-            vc = (-1 if y < 0 else 1) * int(math.floor(abs(y) * 100 + 0.5))
-            cur[vc] = cur.get(vc, 0) + 1
-        ks_keys = sorted(cur)
-        state.update(([int(x) for x in ks_keys], [int(cur[x]) for x in ks_keys]))
-        if idle_timeout is not None:
-            state.setTimeoutDuration(idle_timeout)
+    def score(cur, rcents, rcounts, n_ref):
         n_cur = sum(cur.values())
         if n_cur == 0 or n_ref == 0:
-            return
+            return None
         rmap = dict(zip(rcents, rcounts))
         merged = sorted(set(rcents) | set(cur))
         best_num = -1
@@ -3137,33 +2164,28 @@ def stream_ks_drift(
             num = abs(cumr * n_cur - cumc * n_ref)
             if num > best_num:
                 best_num, best_v = num, v
-        ks = py_round6(best_num / (n_ref * n_cur))
-        crit = alpha_coeff * math.sqrt(
-            (n_ref + n_cur) / (n_ref * n_cur)
-        )
-        row = {type_col: et}
-        if seg_col:
-            row[seg_col] = key[1]
-        row.update(
-            {
-                "n_ref": n_ref,
-                "n_cur": n_cur,
-                "ks": ks,
-                "ks_at_cent": int(best_v),
-                "drift_flag": bool(best_num / (n_ref * n_cur) > crit),
-            }
-        )
-        yield pd.DataFrame([row])
+        crit = alpha_coeff * math.sqrt((n_ref + n_cur) / (n_ref * n_cur))
+        return {
+            "n_ref": n_ref,
+            "n_cur": n_cur,
+            "ks": py_round6(best_num / (n_ref * n_cur)),
+            "ks_at_cent": int(best_v),
+            "drift_flag": bool(best_num / (n_ref * n_cur) > crit),
+        }
 
-    group_cols = [type_col] + ([seg_col] if seg_col else [])
-    return stream_df.groupBy(*group_cols).applyInPandasWithState(
-        process,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _drift_monitor(
+        stream_df,
+        ref_stats,
+        type_col,
+        value_col,
+        seg_col,
+        idle_timeout,
+        [
+            StructField("n_ref", LongType()),
+            StructField("n_cur", LongType()),
+            StructField("ks", DoubleType()),
+            StructField("ks_at_cent", LongType()),
+            StructField("drift_flag", BooleanType()),
+        ],
+        score,
     )
