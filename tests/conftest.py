@@ -27,6 +27,24 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def restore_conf(spark):
+    """The shared session, with every setting the test changes put back
+    afterwards. ``getOrCreate`` on a live session (``build_session``)
+    writes its options straight into the session's SQLConf, core keys
+    such as ``spark.serializer`` included, which ``spark.conf.unset``
+    refuses, so the restore goes through that same SQLConf."""
+    before = spark.conf.getAll
+    yield spark
+    jconf = spark._jsparkSession.sessionState().conf()
+    after = spark.conf.getAll
+    for k in after.keys() - before.keys():
+        jconf.unsetConf(k)
+    for k, v in before.items():
+        if after.get(k) != v:
+            jconf.setConfString(k, v)
+
+
 def hourly_series(spark, values, start="2020-01-01 00:00:00"):
     """(ts, value) DataFrame with hourly timestamps, NaN for missing —
     the shape of every reference golden fixture (FIXTURES.md)."""

@@ -934,16 +934,17 @@ def test_write_partitioned_salted_file_spread(spark, tmp_path):
     assert spark.read.parquet(out).count() == e.count()
 
 
-def test_build_session_conf_applies():
+def test_build_session_conf_applies(restore_conf):
     from tsod_spark.conf import build_session, recommended_conf
 
     s = build_session("conf-test", master="local[2]", total_cores=2)
-    try:
-        assert s.conf.get("spark.sql.adaptive.enabled") == "true"
-        assert s.conf.get("spark.sql.shuffle.partitions") == "6"
-        assert recommended_conf(100)["spark.sql.shuffle.partitions"] == "300"
-    finally:
-        pass  # session is shared JVM-wide; leave it for other tests
+    assert s is restore_conf
+    assert s.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert s.conf.get("spark.sql.shuffle.partitions") == "2"
+    assert s.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum") == "6"
+    conf = recommended_conf(100)
+    assert conf["spark.sql.shuffle.partitions"] == "100"
+    assert conf["spark.sql.adaptive.coalescePartitions.initialPartitionNum"] == "300"
 
 
 # ---- corpus sampling / chunk dedup ------------------------------------

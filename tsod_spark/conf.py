@@ -11,17 +11,27 @@ Rationale per knob (all measured/derived, not folklore):
   statically-chosen shuffle partition counts into right-sized ones,
   and splits the hot LSH band / stopword term partitions the dedup
   and TF-IDF operators create.
-- **shuffle.partitions ~ 2-3x total cores**: the window detectors
-  partition by series key and the dedup family by band/bucket —
-  both generate many small-ish tasks; AQE coalesces the excess.
-  Not for stateful streams: an ``applyInPandasWithState`` operator
-  runs exactly ``spark.sql.shuffle.partitions`` Python tasks every
-  micro-batch, AQE does not coalesce them, and the checkpoint freezes
-  the count, so size it for the stream when the query first starts
-  (12 → 4 state partitions took ``stream_monitor``'s median batch
-  from ~2.2 s to 1.3-1.5 s on 4 vCPUs). Every stateful operator goes
-  through ``tsod_spark.streaming._fold.keyed_fold``, so a
-  state-partition policy belongs there, not in this dict.
+- **Two shuffle counts: cores for stateful streams, 3x cores for
+  batch plans.** The window detectors partition by series key and
+  the dedup family by band/bucket; both generate many small-ish
+  tasks and AQE coalesces the excess, so batch plans start from
+  ``coalescePartitions.initialPartitionNum`` = 3x total cores (with
+  AQE and coalescing on, Spark reads that key, not
+  ``shuffle.partitions``, as a batch plan's shuffle count). A
+  streaming query runs with AQE off, so it reads
+  ``spark.sql.shuffle.partitions`` = total cores as its
+  state-partition count, and the checkpoint freezes it: every
+  ``applyInPandasWithState`` operator runs exactly that many Python
+  tasks each micro-batch however few keys the batch holds, as do the
+  native watermark aggregations, the stream-stream join and the
+  ``foreachBatch`` sink's write. 12 → 4 state partitions took
+  ``stream_monitor``'s median micro-batch from ~1.48 s to ~0.90 s on
+  4 vCPUs. The count cannot come from the key count (unknown when the
+  plan is built), and it cannot be set per operator in
+  ``streaming._fold.keyed_fold``: that only builds a DataFrame, Spark
+  reads the count when ``writeStream.start()`` first runs, and a
+  ``spark.conf.set`` there would leak into every later batch query
+  of the caller's session.
 - **Python-worker import caches**: on CPython < 3.13 every Python task
   re-read ``pyspark.zip`` once per cached zip importer (~170 ms of
   CPU a task); importing ``tsod_spark`` makes workers skip archives
@@ -47,12 +57,20 @@ def recommended_conf(
     total_cores: int = 32,
     shuffle_partition_factor: int = 3,
 ) -> dict[str, str]:
-    """Config dict for a cluster session running these plans at scale."""
+    """Config dict for a cluster session running these plans at scale.
+
+    Stateful streams get one state partition per core;
+    ``shuffle_partition_factor`` scales only the batch plans' initial
+    shuffle count.
+    """
     return {
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.shuffle.partitions": str(total_cores * shuffle_partition_factor),
+        "spark.sql.shuffle.partitions": str(total_cores),
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum": str(
+            total_cores * shuffle_partition_factor
+        ),
         "spark.sql.files.maxPartitionBytes": "256m",
         "spark.sql.autoBroadcastJoinThreshold": "64m",
         "spark.sql.session.timeZone": "UTC",

@@ -34,8 +34,13 @@ the steps every operator shares:
 examples configure ``RocksDBStateStoreProvider``, and switching would
 change the state store under every existing checkpoint. The state
 partition count is ``spark.sql.shuffle.partitions`` when a query
-first starts (the checkpoint freezes it); a policy for it belongs
-here, in :func:`keyed_fold`.
+first starts (the checkpoint freezes it); its policy, one partition
+per core, lives in :func:`tsod_spark.conf.recommended_conf`, not
+here: :func:`keyed_fold` only builds a DataFrame, Spark reads the
+count when ``writeStream.start()`` first runs, and setting it from
+here would mean a ``spark.conf.set`` on the caller's session that
+leaks into every later batch query. The key count, which a policy
+could also weigh, is unknown when the plan is built.
 """
 
 from __future__ import annotations

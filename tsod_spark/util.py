@@ -167,7 +167,10 @@ def default_parallelism(spark: SparkSession) -> int:
 
     ``sparkContext`` only exists on classic sessions; under Spark
     Connect the shuffle-partition setting is the honest equivalent for
-    "how many ways should CPU-bound per-row work spread".
+    "how many ways should CPU-bound per-row work spread". Under
+    :func:`tsod_spark.conf.recommended_conf` that setting is the total
+    core count (batch shuffles start from AQE's ``initialPartitionNum``
+    instead), so the fallback reads the cores.
     """
     try:
         return spark.sparkContext.defaultParallelism
