@@ -25,8 +25,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # rotated so queries without a driver verdict yet come first (the
-    # driver's oracle run covers the first 50 entries per round)
+    # the driver's oracle run covers the first 50 entries per round, so
+    # order by the committed CORRECTNESS_r*.json records: names without
+    # a verdict on their current code first, then stalest verdict first
     return registry.ordered_queries()
 
 

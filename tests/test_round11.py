@@ -913,39 +913,25 @@ def test_rotation_window_invariants():
     from tsod_spark import registry
 
     names = list(registry.ordered_queries())
+    assert len(names) == len(registry.QUERIES)
     assert set(names) == set(registry.QUERIES)
-    prio = list(registry._CURRENT_ROUND_PRIORITY)
-    # 1. current-round priority names lead the window
-    assert names[: len(prio)] == [n for n in names if n in prio]
-    # 2. after the priority block, verified names appear in
-    #    nondecreasing latest-verdict order
-    verified_rounds = [
-        registry._latest_verified_round(n)
-        for n in names[len(prio) :]
-        if registry._latest_verified_round(n) > 0
-    ]
-    assert verified_rounds == sorted(verified_rounds)
-    # 3. never-verified non-priority names (this round's new
-    #    registrations) slot at _NEW_REGISTRATION_AGE: immediately
-    #    after the priority block, BEFORE every verified tier, so each
-    #    new registration earns a driver verdict in its first eligible
-    #    round (the r12 park-behind policy is retired — its window
-    #    math was a one-round constraint)
-    assert 0 < registry._NEW_REGISTRATION_AGE < 1
-    new_idx = [
-        i
-        for i, n in enumerate(names)
-        if n not in prio and registry._latest_verified_round(n) == 0
-    ]
-    if new_idx:
-        assert min(new_idx) >= len(prio)
-        verified_idx = [
-            i
-            for i, n in enumerate(names)
-            if n not in prio and registry._latest_verified_round(n) > 0
-        ]
-        if verified_idx:
-            assert max(new_idx) < min(verified_idx)
+    latest = registry._latest_verified_rounds()
+
+    def due(n):
+        return latest.get(n, 0) < registry.CHANGED.get(n, 1)
+
+    # 1. names without a verdict on their current code (never verified,
+    #    or changed since their latest verdict) lead the order
+    n_due = sum(map(due, names))
+    assert all(due(n) for n in names[:n_due])
+    assert not any(due(n) for n in names[n_due:])
+    # 2. the rest appear stalest verdict first
+    rest = [latest[n] for n in names[n_due:]]
+    assert rest == sorted(rest)
+    # 3. registration order holds within each tier
+    reg = {n: i for i, n in enumerate(registry.QUERIES)}
+    tier = {n: 0 if due(n) else latest[n] for n in names}
+    assert names == sorted(names, key=lambda n: (tier[n], reg[n]))
 
 
 def test_ks_by_segment_degenerate_population_refused(spark):

@@ -1,5 +1,4 @@
-"""Round-14 tests: the driver-window pin (VERDICT r13 #1) and the
-round's build items — persisted RESIDUAL IVF+PQ serving (#2), the
+"""Round-14 tests: persisted RESIDUAL IVF+PQ serving (#2), the
 cell-block certificate's sampled-twin regime (#3), image near-dup
 dedup (#5), multi-probe cell blocking (#6), the persisted-index
 content-fingerprint staleness gate (#7), and the second wave: the
@@ -8,45 +7,6 @@ compaction), audio + video near-dup over the shared Hamming engine,
 the streaming Hamming screen, and hybrid RRF retrieval."""
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_r14_window_composition():
-    """VERDICT r13 #1 done-criterion, pinned: the r14 driver window
-    opens with EXACTLY the 10 r8-era-verdict queries, followed by any
-    new r14 registrations (never-verified), then the r9-stale tier in
-    registration order. Nothing with a verdict older than r9 may hide
-    behind the window boundary, and only r9-tier names may spill."""
-    from tsod_spark import registry
-
-    names = list(registry.ordered_queries())
-    window = names[:50]
-    prio = [
-        "ts_theil_sen",
-        "events_mannwhitney",
-        "orders_km_quartiles",
-        "ts_permutation_entropy",
-        "ts_sax_motifs",
-        "orders_nelson_aalen",
-        "ts_conformal_snaive",
-        "events_attribution_credit",
-        "ts_periodogram",
-        "supplier_ship_latency",
-    ]
-    assert window[:10] == prio
-    # after the 10: new r14 registrations (never-verified), then r9-stale
-    rest = window[10:]
-    ages = [registry._latest_verified_round(n) for n in rest]
-    n_new = sum(1 for a in ages if a == 0)
-    assert ages == [0] * n_new + [9] * (len(rest) - n_new), list(
-        zip(rest, ages)
-    )
-    # everything outside the window is r9-or-younger (only r9-tier
-    # names may spill; nothing staler than r9 remains unburned)
-    outside = names[50:]
-    assert all(
-        registry._latest_verified_round(n) >= 9 for n in outside
-    ), [(n, registry._latest_verified_round(n)) for n in outside
-        if registry._latest_verified_round(n) < 9]
 
 
 # --- VERDICT r13 #2: persisted RESIDUAL IVF+PQ serving ---------------
