@@ -24,6 +24,7 @@ Per-query numbers are then position-independent and reproducible.
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import subprocess
@@ -33,44 +34,40 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def _build_session(cpus: str):
-    from pyspark.sql import SparkSession
+def session_conf(cpus: str) -> dict[str, str]:
+    """The bench's settings, on top of ``build_session``'s local block.
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("tsod_spark-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        # scan split size, env-parameterized for A/B only: the 128m
-        # default matches Spark's and keeps the driver's bench
-        # comparable; production-scale guidance is LARGER splits
-        # (512m-1g, guide 6), so shrinking it to fit the local fixture
-        # would be a local-only tuning (see OPTIMIZATION_r15.md for
-        # the measured 32m A/B)
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"),
-        )
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        # Codegen-heavy plans overflow the JVM JIT code cache once a
-        # session runs many of them; when it fills, compilation stops
-        # and generated code runs interpreted 3-10x slower (r6: 165
-        # plans blew the 240m default, dedup pairs 3s->10s). Sized to
-        # the per-chunk plan count with room; chunking above is the
-        # structural fix.
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=2g -XX:+UseCodeCacheFlushing",
-        )
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
+    They differ from ``recommended_conf`` in five settings: the initial
+    batch shuffle count (1x cores, not 3x), the scan split size (128m,
+    not 256m), the serializer (Java, not Kryo), the broadcast threshold
+    (Spark's 10m, not 64m) and ``nanosAsLong`` (unset; ``registry.table``
+    sets it where a fixture needs it). Every BENCH record was measured
+    under these; reconciling them takes a bench A/B of its own."""
+    return {
+        "spark.sql.shuffle.partitions": cpus,
+        # scan split size: the 128m default matches Spark's and keeps
+        # the driver's bench comparable; production-scale guidance is
+        # LARGER splits (512m-1g, guide 6), so shrinking it to fit the
+        # local fixture would be a local-only tuning (see
+        # OPTIMIZATION_r15.md for the measured 32m A/B)
+        "spark.sql.files.maxPartitionBytes": "128m",
+        "spark.sql.adaptive.enabled": "true",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    }
+
+
+def noop_once(spark, fn, sf_dir: str) -> float:
+    """Wall seconds of one run of query ``fn`` at ``sf_dir`` into a noop
+    sink, followed by untimed inter-query hygiene: several operators
+    cache small intermediates (LSH signatures, CC labels/checkpoints)
+    that stay pinned after the query's action completes, and leaked
+    blocks inflate late-running queries (measured r5)."""
+    t0 = time.time()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    elapsed = time.time() - t0
+    spark.catalog.clearCache()
+    gc.collect()
+    return elapsed
 
 
 def _warm_session(spark, sf_dir: str, warm_dir: str, chunk) -> list[str]:
@@ -80,8 +77,6 @@ def _warm_session(spark, sf_dir: str, warm_dir: str, chunk) -> list[str]:
     chunk's queries (JMH-style: Janino + HotSpot warm for every plan
     about to be timed, while the timed loop still reads sf0.1 cold —
     only code, not data, is warm)."""
-    import gc
-
     from pyspark.sql import functions as F
     from pyspark.sql import Window as _W
 
@@ -151,14 +146,16 @@ def _warm_session(spark, sf_dir: str, warm_dir: str, chunk) -> list[str]:
 def run_slice() -> None:
     """Child mode: bench queries [i, j) of the rotation order in this
     fresh JVM and print one JSON line."""
-    import gc
+    from tsod_spark.conf import build_session
 
     lo, hi = (int(x) for x in os.environ["SPARK_GRAFT_SLICE"].split(":"))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
 
-    spark = _build_session(cpus)
+    spark = build_session(
+        "tsod_spark-bench", f"local[{cpus}]", conf=session_conf(cpus)
+    )
     import __spark_entry__ as entrymod
 
     items = list(entrymod.queries().items())[lo:hi]
@@ -195,10 +192,10 @@ def run_slice() -> None:
     #  (b) rare non-JIT scheduler/GC jitter in the many-small-jobs CC
     #      queries (dedup_simhash_groups: one 12.8s excursion in 34
     #      isolated runs, compile-quiet, no PSI io/cpu stall).
-    # Mitigation: one UNTIMED sf0.1 absorber run (soaks the deopt/
-    # recompile cycle at the measured scale) + median-of-3 with the
-    # spread reported (soaks the residual jitter); everything else
-    # runs once.
+    # Mitigation: UNTIMED converged-warm absorber runs at sf0.1 (soak
+    # the deopt/recompile cycle at the measured scale) + median-of-3
+    # with the spread reported (soaks the residual jitter); everything
+    # else runs once.
     cc_family = frozenset(
         os.environ.get(
             "SPARK_GRAFT_MEDIAN3",
@@ -227,45 +224,19 @@ def run_slice() -> None:
         ).split()
     )
 
-    def _run_once(fn) -> float:
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        elapsed = time.time() - t0
-        # Untimed inter-query hygiene: several operators cache small
-        # intermediates (LSH signatures, CC labels/checkpoints) that
-        # stay pinned after the query's action completes; leaked blocks
-        # inflate late-running queries (measured r5).
-        spark.catalog.clearCache()
-        gc.collect()
-        return elapsed
-
     timings: dict[str, float] = {}
     median3: dict[str, dict] = {}
     for name, fn in items:
         if name in cc_family:
-            # converged-warm absorber (JMH-style): up to 3 untimed
-            # runs, stopping once the sequence is non-increasing AND
-            # within 1.3x of the fastest seen — one absorber was
-            # measured insufficient for the deepest hump
-            # (dedup_threshold_curve timed [31.0, 13.8, 5.1] AFTER a
-            # single absorber; the C2 recompile race can span runs).
-            # Flat queries exit after 2 absorbers; humped ones use 3.
-            prev = _run_once(fn)
-            best = prev
-            for _ in range(2):
-                nxt = _run_once(fn)
-                best = min(best, nxt)
-                if nxt <= prev and nxt <= 1.3 * best:
-                    break
-                prev = nxt
-            runs = [round(_run_once(fn), 3) for _ in range(3)]
+            converged_warm(lambda: noop_once(spark, fn, sf_dir))
+            runs = [round(noop_once(spark, fn, sf_dir), 3) for _ in range(3)]
             timings[name] = sorted(runs)[1]
             median3[name] = {
                 "runs": runs,
                 "spread": round(max(runs) - min(runs), 3),
             }
         else:
-            timings[name] = round(_run_once(fn), 3)
+            timings[name] = round(noop_once(spark, fn, sf_dir), 3)
     print(
         json.dumps(
             {
@@ -277,7 +248,6 @@ def run_slice() -> None:
         )
     )
     spark.stop()
-
 
 
 def converged_warm(once) -> None:
@@ -300,7 +270,7 @@ def converged_warm(once) -> None:
 
 
 def steady_median3(once, spread_frac: float = 0.2, max_runs: int = 9):
-    """Steady-state median-of-3 (shared by the scale probes): after the
+    """Steady-state median-of-3 (the decade probe's timing loop): after the
     converged-warm absorbers, keep timing until the LAST 3 consecutive
     runs have spread <= ``spread_frac`` of their median (the SCALE-row
     hygiene bar), up to ``max_runs``. Returns (median, spread,
@@ -335,25 +305,19 @@ def run_retime() -> None:
     VERDICT r9/r10 ran by hand: sf0.001 compile pass, converged-warm
     absorbers at the target sf, then median-of-3; prints one JSON line
     {name: {"runs": [...], "median": s}}."""
-    import gc
+    from tsod_spark.conf import build_session
 
     names = os.environ["SPARK_GRAFT_RETIME"].split(",")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
 
-    spark = _build_session(cpus)
+    spark = build_session(
+        "tsod_spark-bench", f"local[{cpus}]", conf=session_conf(cpus)
+    )
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
-
-    def _once(fn) -> float:
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        elapsed = time.time() - t0
-        spark.catalog.clearCache()
-        gc.collect()
-        return elapsed
 
     out: dict[str, dict] = {}
     for name in names:
@@ -366,8 +330,8 @@ def run_retime() -> None:
             except Exception:
                 pass
             spark.catalog.clearCache()
-        converged_warm(lambda: _once(fn))
-        runs = [round(_once(fn), 3) for _ in range(3)]
+        converged_warm(lambda: noop_once(spark, fn, sf_dir))
+        runs = [round(noop_once(spark, fn, sf_dir), 3) for _ in range(3)]
         out[name] = {"runs": runs, "median": sorted(runs)[1]}
     print(json.dumps(out))
     spark.stop()

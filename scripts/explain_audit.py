@@ -259,23 +259,11 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    from pyspark.sql import SparkSession
+    from tsod_spark.conf import build_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("explain-audit")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        # 2g JIT code cache: 227 codegen-heavy plans overflow even 1g
-        # default and fall to interpreted execution (see bench.py note)
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=2g -XX:+UseCodeCacheFlushing",
-        )
-        .getOrCreate()
+    spark = build_session(
+        "explain-audit", "local[8]", conf={"spark.sql.shuffle.partitions": "8"}
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod
 

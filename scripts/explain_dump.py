@@ -19,8 +19,12 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     import bench
     from tsod_spark import registry
+    from tsod_spark.conf import build_session
 
-    spark = bench._build_session(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    spark = build_session(
+        "tsod_spark-bench", f"local[{cpus}]", conf=bench.session_conf(cpus)
+    )
     for name in names:
         df = registry.QUERIES[name](spark, sf_dir)
         txt = df._sc._jvm.PythonSQLUtils.explainString(

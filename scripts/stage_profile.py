@@ -29,31 +29,23 @@ def main() -> None:
     os.environ["SPARK_GRAFT_EVENTLOG_DIR"] = evdir
 
     import bench
-    from pyspark.sql import SparkSession
-
     from tsod_spark import registry
+    from tsod_spark.conf import build_session
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("stage-profile")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", evdir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=2g -XX:+UseCodeCacheFlushing",
-        )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        .getOrCreate()
+    spark = build_session(
+        "stage-profile",
+        f"local[{cpus}]",
+        conf={
+            "spark.sql.shuffle.partitions": cpus,
+            "spark.sql.adaptive.enabled": "true",
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": evdir,
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.rolling.enabled": "false",
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     q = registry.QUERIES[name]
 
     def _noop(df):

@@ -20,8 +20,12 @@ def main() -> None:
     n = int(sys.argv[3]) if len(sys.argv) > 3 else 3
     import bench
     from tsod_spark import registry
+    from tsod_spark.conf import build_session
 
-    spark = bench._build_session(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    spark = build_session(
+        "tsod_spark-bench", f"local[{cpus}]", conf=bench.session_conf(cpus)
+    )
     q = registry.QUERIES[name]
 
     def _noop(df):

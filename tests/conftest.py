@@ -2,26 +2,16 @@ import datetime
 import math
 
 import pytest
-from pyspark.sql import SparkSession
+
+from tsod_spark.conf import build_session
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("tsod_spark-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", "false")
-        # 165 codegen-heavy plans overflow the JVM's default 240m JIT
-        # code cache mid-session; once it fills, compilation stops and
-        # CPU-bound generated code (md5 dedup pipelines) runs
-        # interpreted 3-7x slower -- the root cause of the CC-family
-        # run-to-run variance (measured: pairs phase 3s->10s across
-        # trials, steady 1.6s with this flag).
-        .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=2g -XX:+UseCodeCacheFlushing")
-        .getOrCreate()
+    s = build_session(
+        "tsod_spark-tests",
+        "local[4]",
+        conf={"spark.sql.shuffle.partitions": "4"},
     )
     yield s
     s.stop()

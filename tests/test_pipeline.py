@@ -266,6 +266,55 @@ def test_pair_graph_groups_vs_union_find(spark):
         assert len(out) == len(ids)
 
 
+def test_pair_graph_groups_loop_raises_until_converged(spark):
+    """The propagation loop on a 30-id path needs 15 two-round
+    iterations: fewer must raise instead of returning the split chain,
+    enough must give the driver union-find's labels."""
+    import pandas as pd
+
+    path = [(i, i + 1) for i in range(29)]
+    universe = spark.createDataFrame([(i,) for i in range(30)], "doc_id long")
+    pairs = spark.createDataFrame(path, "doc_a long, doc_b long")
+
+    def loop(max_iter):
+        return dedup.pair_graph_groups(
+            pairs, "doc_a", "doc_b", universe, "doc_id",
+            max_iter=max_iter, driver_cc_max_edges=0,
+        )
+
+    with pytest.raises(RuntimeError, match=r"max_iter=3 iterations \(6 propagation rounds\)"):
+        loop(3)
+    expect = dedup._driver_union_find(pd.DataFrame(path, columns=["a", "b"]), "a", "b")
+    got = sorted((r.doc_id, r.group_id, r.group_size) for r in loop(20).collect())
+    assert got == list(zip(*expect))
+
+
+def test_minhash_chain_same_groups_on_both_cc_paths(spark):
+    """A 40-doc chain of 50-token sliding windows (consecutive docs
+    ~96% Jaccard) keeps all 40 rows and resolves to a handful of
+    groups, never 40 singletons, with equal labels on the driver
+    union-find and the propagation loop."""
+    chain = spark.range(40).select(
+        (F.col("id") + 900_000_000).alias("doc_id"),
+        F.concat_ws(
+            " ",
+            F.transform(
+                F.sequence(F.col("id"), F.col("id") + 49),
+                lambda x: F.concat(F.lit("chainword"), x),
+            ),
+        ).alias("text"),
+    )
+    driver = dedup.minhash_duplicate_groups(chain, max_iter=40)
+    pairs = dedup._minhash_candidate_pairs(dedup.minhash_signatures(chain), 8, 4)
+    loop = dedup.pair_graph_groups(
+        pairs, "doc_a", "doc_b", chain, "doc_id", max_iter=40, driver_cc_max_edges=0
+    )
+    rows = sorted(tuple(r) for r in driver.select("doc_id", "group_id", "group_size").collect())
+    assert rows == sorted(tuple(r) for r in loop.select("doc_id", "group_id", "group_size").collect())
+    assert len(rows) == 40
+    assert len({g for _, g, _ in rows}) <= 5
+
+
 def test_redact_crafted_pii(spark):
     from tsod_spark.pipeline import curate
 

@@ -133,3 +133,29 @@ def test_no_module_sets_shuffle_partitions_per_operator():
     conf = recommended_conf(4)
     assert conf[key] == "4"
     assert conf["spark.sql.adaptive.coalescePartitions.initialPartitionNum"] == "12"
+
+
+def test_sessions_are_built_only_by_build_session():
+    """``conf.build_session`` is the one place a session is configured,
+    so the tests, the bench and the scripts cannot drift apart. Exempt:
+    ``perfbench/`` and the fresh-JVM probe in ``test_zipimport_cache``."""
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    exempt = {"tsod_spark/conf.py", "tests/test_zipimport_cache.py"}
+    hits = {}
+    for path in repo.rglob("*.py"):
+        rel = path.relative_to(repo)
+        if rel.as_posix() in exempt or rel.parts[0] == "perfbench" or any(
+            part.startswith(".") for part in rel.parts
+        ):
+            continue
+        lines = [
+            node.lineno
+            for node in ast.walk(ast.parse(path.read_text()))
+            if isinstance(node, ast.Attribute)
+            and node.attr == "builder"
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "SparkSession"
+        ]
+        if lines:
+            hits[rel.as_posix()] = lines
+    assert not hits, f"SparkSession.builder outside conf.build_session: {hits}"

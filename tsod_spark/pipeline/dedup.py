@@ -451,7 +451,9 @@ def pair_graph_groups(
     family (minhash, simhash, embedding-cosine).
 
     Returns ``(id_col, group_id, group_size)`` covering all of
-    ``universe``.
+    ``universe``. Above ``driver_cc_max_edges`` the propagation loop
+    runs at most ``max_iter`` iterations of two rounds each, and raises
+    ``RuntimeError`` if the labels are still changing after them.
 
     Scale notes (measured on the minhash family): the loop is
     DRIVER-side control flow only — per round one join + groupBy on
@@ -585,6 +587,14 @@ def pair_graph_groups(
         labels = new_labels
         if not changed:
             break
+    else:
+        # labels still moving: returning them would split a component
+        # (a chain deeper than 2 * max_iter hops) into several groups
+        labels.unpersist()
+        raise RuntimeError(
+            f"pair_graph_groups did not converge: labels still changed after "
+            f"max_iter={max_iter} iterations ({2 * max_iter} propagation rounds)"
+        )
     w = Window.partitionBy("group_id")
     grouped = labels.select(
         id_col, "group_id", F.count(F.lit(1)).over(w).alias("group_size")
