@@ -251,10 +251,12 @@ def run_slice() -> None:
 
 
 def converged_warm(once) -> None:
-    """The converged-warm absorber protocol (shared by run_retime,
-    scripts/time_one.py, and both scale probes — ONE implementation so
-    the timing discipline the SCALE/BENCH records claim to share cannot
-    silently diverge): run ``once()`` untimed up to 3 times, stopping
+    """The converged-warm absorber protocol (shared by run_slice,
+    run_retime, scripts/time_one.py, scripts/stage_profile.py,
+    scripts/decade_probe.py through steady_median3, and perfbench's
+    child — ONE implementation so the timing discipline the SCALE/BENCH
+    records claim to share cannot silently diverge): run ``once()``
+    untimed up to 3 times, stopping
     as soon as the sequence is non-increasing AND within 1.3x of the
     fastest seen. One absorber is measured insufficient for the deepest
     C2-recompile humps (r9: threshold_curve timed [31.0, 13.8, 5.1]

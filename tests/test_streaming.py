@@ -175,6 +175,36 @@ def test_operational_lifecycle_fit_save_load_stream(spark, events_batches, tmp_p
     assert not mismatches, f"{len(mismatches)} mismatches: {mismatches[:3]}"
 
 
+def test_fused_combined_fit_save_load_stream(spark, events_batches, tmp_path):
+    """A per-series fitted CombinedDetector gives its leaves one shared
+    params frame: one sidecar through save/load, joined onto the stream
+    once, and the stream still equals batch detect row for row."""
+    from tsod_spark import load, save
+
+    df = registry.table(spark, SF, "events")
+    tsf = TimeSeriesFrame(df, series=["user_id"], tiebreak=["event_id"])
+    fitted = CombinedDetector(
+        [
+            RangeDetector(quantiles=[0.05, 0.95]),
+            DiffDetector(),
+            RollingStandardDeviationDetector(10),
+        ]
+    ).fit(tsf)
+    p = tmp_path / "fused_model.json"
+    save(fitted, p)
+
+    loaded = load(p, spark)
+    assert len({id(leaf._params_df) for leaf in loaded}) == 1
+    got = run_stream(spark, events_batches, loaded)
+    assert len(got) > 0 and any(r.is_anomaly for r in got)
+    rows = fitted.detect(tsf).select("user_id", "ts", "is_anomaly").collect()
+    expected = {(r.user_id, r.ts): r.is_anomaly for r in rows}
+    mismatches = [
+        (r.user_id, r.ts) for r in got if expected[(r.user_id, r.ts)] != r.is_anomaly
+    ]
+    assert not mismatches, f"{len(mismatches)} mismatches: {mismatches[:3]}"
+
+
 def test_stream_drops_pre_cursor_late_rows(spark, tmp_path):
     """A row older than the buffered tail is dropped, not emitted out
     of order (the documented contract)."""

@@ -7,7 +7,8 @@ _postprocess``. Here the same template produces *lazy plans*:
 - ``fit(tsf)`` runs a tiny aggregation job and stores 1-2 scalars per
   series (the reference's learned state, SURVEY §1.1). With a ``series``
   key the params live in a small DataFrame that detect() broadcast-joins
-  back — never a shuffle of the big side.
+  back — never a shuffle of the big side. A CombinedDetector fits all
+  its plain-aggregate leaves in one such aggregation (``fit_fused``).
 - ``detect(tsf)`` appends an ``is_anomaly BOOLEAN`` column to a lazy
   DataFrame; nothing executes until the caller acts. All detectors window
   over the same ``partitionBy(series).orderBy(ts)`` spec, so Catalyst
@@ -69,20 +70,38 @@ class SparkDetector(abc.ABC):
         a small params DataFrame; otherwise collected to driver scalars.
         """
         tsf = as_tsf(data)
-        self._fit(tsf)
+        spec = self._fit_spec(tsf)
+        if spec is None:
+            self._fit(tsf)
+        else:
+            fit_fused(tsf, [(self, spec)])
         return self
+
+    def _fit_spec(self, tsf: TimeSeriesFrame):
+        """``(window_columns, aggregates)`` when the fit is one plain
+        aggregation, else None (the fit runs through ``_fit``).
+
+        Window columns are computed over ``tsf.w()`` before the
+        aggregation; aggregates may read them as ``F.col(self.tmp(name))``.
+        A fit given as a spec can share its aggregation with other
+        leaves (see :func:`fit_fused`).
+        """
+        return None
 
     def _fit(self, tsf: TimeSeriesFrame) -> None:
         # Default is a no-op, like /root/reference/tsod/base.py:43-45.
         return None
+
+    def _adopt(self, params: dict) -> None:
+        """Take globally-fitted scalars (no series key)."""
+        self._params = params
 
     def detect(self, data, out_col: str = "is_anomaly") -> DataFrame:
         """Append a boolean anomaly column; True == anomaly (base.py:47-63)."""
         tsf = as_tsf(data)
         keep = set(tsf.df.columns) | {out_col}
         if self._params_df is not None:
-            joined = tsf.df.join(F.broadcast(self._params_df), on=tsf.series, how="left")
-            tsf = tsf.with_df(joined)
+            tsf = tsf.with_df(join_params(tsf.df, self._params_df, tsf.series))
         out = self._attach(tsf, out_col)
         out = out.drop(*[c for c in out.columns if c not in keep])
         return self._postprocess(out, out_col)
@@ -95,19 +114,41 @@ class SparkDetector(abc.ABC):
     def _attach(self, tsf: TimeSeriesFrame, out_col: str) -> DataFrame:
         """Build the lazy plan appending ``out_col`` (temps allowed)."""
 
-    # -- per-series fit plumbing ----------------------------------------
-    def _store_fit(self, tsf: TimeSeriesFrame, aggs: dict[str, Column]) -> None:
-        """Run the fit aggregation; store scalars (no series) or a small
-        per-series params DataFrame (broadcast at detect time)."""
-        named = [v.alias(self.tmp(k)) for k, v in aggs.items()]
-        if tsf.series:
-            self._params_df = tsf.df.groupBy(*tsf.series).agg(*named)
-            self._params = None
-        else:
-            row = tsf.df.agg(*named).first()
-            self._params = {k: row[self.tmp(k)] for k in aggs}
-            self._params_df = None
-
     # -- misc -----------------------------------------------------------
     def __str__(self):
         return self.__class__.__name__
+
+
+def join_params(df: DataFrame, params_df: DataFrame, series) -> DataFrame:
+    """Broadcast-join a params frame, unless its columns are already on
+    ``df`` (a CombinedDetector joins a frame its leaves share once)."""
+    if set(params_df.columns) <= set(df.columns):
+        return df
+    return df.join(F.broadcast(params_df), on=series, how="left")
+
+
+def fit_fused(tsf: TimeSeriesFrame, specs) -> None:
+    """Fit several leaves in one aggregation.
+
+    ``specs`` pairs each leaf with its ``_fit_spec``. Every window
+    column goes over the one ``tsf.w()`` sort, then one
+    ``groupBy(series).agg`` (or, without a series key, one ``.first()``)
+    computes every leaf's aggregates. Keyed leaves all hold the same
+    params frame, so saving, loading and detecting touch it once.
+    """
+    df = tsf.df
+    for leaf, (cols, _) in specs:
+        for name, col in cols.items():
+            df = df.withColumn(leaf.tmp(name), col)
+    named = [
+        agg.alias(leaf.tmp(k)) for leaf, (_, aggs) in specs for k, agg in aggs.items()
+    ]
+    if tsf.series:
+        params_df = df.groupBy(*tsf.series).agg(*named)
+        for leaf, _ in specs:
+            leaf._params_df, leaf._params = params_df, None
+        return
+    row = df.agg(*named).first()
+    for leaf, (_, aggs) in specs:
+        leaf._params_df = None
+        leaf._adopt({k: row[leaf.tmp(k)] for k in aggs})

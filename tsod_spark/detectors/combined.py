@@ -7,12 +7,15 @@ flag column over the same per-series sort, then the flags OR-fold.
 Catalyst collapses the shared scan and the identical window specs, so N
 detectors cost one shuffle + one sort regardless of N — the headline
 "declare the plan, let the optimizer fuse it" win (SURVEY §2.1 D8).
+``fit`` fuses the same way: one aggregation job for all leaves whose
+fit is a plain aggregate, one shared params frame.
 
 Implements the Sequence protocol like the reference (indexable, len).
 """
 
 from __future__ import annotations
 
+from collections import Counter
 from collections.abc import Sequence
 from functools import reduce
 
@@ -20,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..frame import TimeSeriesFrame
-from .base import SparkDetector, as_tsf
+from .base import SparkDetector, as_tsf, fit_fused, join_params
 
 
 class CombinedDetector(SparkDetector, Sequence):
@@ -36,14 +39,39 @@ class CombinedDetector(SparkDetector, Sequence):
         self._detectors = list(detectors)
 
     def fit(self, data):
+        """Fan-out fit (detectors.py:38-41) in one aggregation: every leaf
+        whose fit is a plain aggregate adds its window columns over the
+        shared sort and its aggregates to one ``groupBy`` (or one
+        ``.first()`` without a series key); the others fit on their own."""
         tsf = as_tsf(data)
-        for detector in self._detectors:  # fan-out, detectors.py:38-41
-            detector.fit(tsf)
+        fused = []
+        for leaf in self.leaves():
+            spec = leaf._fit_spec(tsf)
+            if spec is None:
+                leaf.fit(tsf)
+            else:
+                fused.append((leaf, spec))
+        if fused:
+            fit_fused(tsf, fused)
         return self
 
+    def leaves(self):
+        """Leaf detectors in deterministic (depth-first) order."""
+        for det in self._detectors:
+            if isinstance(det, CombinedDetector):
+                yield from det.leaves()
+            else:
+                yield det
+
     def _attach(self, tsf: TimeSeriesFrame, out_col: str) -> DataFrame:
-        flag_cols = []
         df = tsf.df
+        # A params frame that several leaves share (a fused fit) is
+        # joined once here; each leaf then finds its columns present.
+        frames = [leaf._params_df for leaf in self.leaves() if leaf._params_df is not None]
+        counts = Counter(id(f) for f in frames)
+        for f in {id(f): f for f in frames if counts[id(f)] > 1}.values():
+            df = join_params(df, f, tsf.series)
+        flag_cols = []
         for i, det in enumerate(self._detectors):
             c = self.tmp(f"flag{i}")
             df = det.detect(tsf.with_df(df), out_col=c)

@@ -43,20 +43,14 @@ class DiffDetector(SparkDetector):
     def _diff(self, tsf: TimeSeriesFrame) -> Column:
         return tsf.value - F.lag(tsf.value).over(tsf.w())
 
-    def _fit(self, tsf: TimeSeriesFrame) -> None:
-        self._store_fit(tsf, {"max_diff": F.max(F.col(self.tmp("d")))})
-        if self._params is not None:
-            self._max_diff = self._params["max_diff"]
+    def _fit_spec(self, tsf: TimeSeriesFrame):
+        # diff is a window expression, so it is a column before the fit
+        # aggregation (groupBy can't nest window fns).
+        return {"d": self._diff(tsf)}, {"max_diff": F.max(F.col(self.tmp("d")))}
 
-    def fit(self, data):
-        # diff is a window expression, so materialize it as a column
-        # before the fit aggregation (groupBy can't nest window fns).
-        from .base import as_tsf
-
-        tsf = as_tsf(data)
-        tsf = tsf.with_column(self.tmp("d"), self._diff(tsf))
-        self._fit(tsf)
-        return self
+    def _adopt(self, params: dict) -> None:
+        super()._adopt(params)
+        self._max_diff = params["max_diff"]
 
     def _threshold(self) -> Column:
         if self._params_df is not None:

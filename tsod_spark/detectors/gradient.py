@@ -49,14 +49,16 @@ class GradientDetector(SparkDetector):
             )
         self._direction = direction
 
-    def fit(self, data):
+    def _fit_spec(self, tsf: TimeSeriesFrame):
         """max |gradient| of normal data (detectors.py:305-309)."""
-        tsf = as_tsf(data)
-        tsf = tsf.with_column(self.tmp("g"), gradient_col(tsf))
-        self._store_fit(tsf, {"max_gradient": F.max(F.abs(F.col(self.tmp("g"))))})
-        if self._params is not None:
-            self._max_gradient = self._params["max_gradient"]
-        return self
+        return (
+            {"g": gradient_col(tsf)},
+            {"max_gradient": F.max(F.abs(F.col(self.tmp("g"))))},
+        )
+
+    def _adopt(self, params: dict) -> None:
+        super()._adopt(params)
+        self._max_gradient = params["max_gradient"]
 
     def _threshold(self) -> Column:
         if self._params_df is not None:

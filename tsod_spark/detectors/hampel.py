@@ -8,7 +8,7 @@ hot path. Semantics reproduced exactly:
   hampel.py:51 *excludes* the right edge -> ``rowsBetween(-w, w-1)``
   (2w rows including the current one);
 - nanmedian / nanMAD (NaN-skipping -> NULL-skipping after ingest
-  normalization): exact medians from ``array_sort(collect_list(v))``
+  normalization): exact medians from ``sort_array(collect_list(v))``
   with linear interpolation for even counts;
 - scale factor k = 1.4826 (hampel.py:13) applied to the MAD;
 - only interior points ``t in [w, n - w)`` are ever flagged
@@ -78,20 +78,25 @@ class HampelDetector(SparkDetector):
         w = self._window_size
         win = tsf.w()
         frame = win.rowsBetween(-w, w - 1)  # half-open [t-w, t+w)
-        arr_col, med_col, mad_col = self.tmp("arr"), self.tmp("med"), self.tmp("mad")
+        arr_col, med_col = self.tmp("arr"), self.tmp("med")
+        dev_col, mad_col, rn_col = self.tmp("dev"), self.tmp("mad"), self.tmp("rn")
 
-        df = tsf.df.withColumn(arr_col, F.collect_list(tsf.value).over(frame))
-        df = df.withColumn(med_col, array_median(F.array_sort(F.col(arr_col))))
+        # Each sorted array is its own column: array_median reads its
+        # argument four times and Catalyst does not dedupe repeated
+        # higher-order subtrees, so an inline sort would run per read.
+        # sort_array is codegen'd and orders like array_sort here (the
+        # arrays are NULL-free: collect_list drops NULLs).
+        df = tsf.df.withColumn(arr_col, F.sort_array(F.collect_list(tsf.value).over(frame)))
+        df = df.withColumn(rn_col, F.row_number().over(win))
+        df = df.withColumn(med_col, array_median(F.col(arr_col)))
         absdev_arr = F.transform(F.col(arr_col), lambda x: F.abs(x - F.col(med_col)))
+        df = df.withColumn(dev_col, F.sort_array(absdev_arr))
         df = df.withColumn(
-            mad_col,
-            F.lit(GAUSSIAN_SCALE_FACTOR) * array_median(F.array_sort(absdev_arr)),
+            mad_col, F.lit(GAUSSIAN_SCALE_FACTOR) * array_median(F.col(dev_col))
         )
 
-        rn = F.row_number().over(win)
-        cnt = F.count(F.lit(1)).over(
-            tsf.with_df(df).w_all()
-        )
+        rn = F.col(rn_col)
+        cnt = F.count(F.lit(1)).over(tsf.with_df(df).w_all())
         interior = (rn > w) & (rn <= cnt - w)  # loop bounds hampel.py:50
         dev = F.abs(tsf.value - F.col(med_col))
         flag = interior & as_pred(dev > F.lit(float(self._threshold)) * F.col(mad_col))

@@ -32,7 +32,7 @@ class RangeDetector(SparkDetector):
             assert 0.0 <= quantiles[1] <= 1.0
             self._quantiles = list(quantiles)
 
-    def _fit(self, tsf: TimeSeriesFrame) -> None:
+    def _fit_spec(self, tsf: TimeSeriesFrame):
         """min/max from exact quantiles of normal data (detectors.py:104-119).
 
         Exact ``percentile`` (linear interpolation, same as
@@ -41,14 +41,12 @@ class RangeDetector(SparkDetector):
         """
         ql, qh = self._quantiles
         q = F.percentile(tsf.value, F.lit([float(ql), float(qh)]))
-        self._store_fit(
-            tsf,
-            {"min": F.array_min(q), "max": F.array_max(q)},
-        )
-        if self._params is not None:
-            self._min = self._params["min"]
-            self._max = self._params["max"]
-            assert self._max >= self._min  # detectors.py:118
+        return {}, {"min": F.array_min(q), "max": F.array_max(q)}
+
+    def _adopt(self, params: dict) -> None:
+        super()._adopt(params)
+        self._min, self._max = params["min"], params["max"]
+        assert self._max >= self._min  # detectors.py:118
 
     def _bounds(self, tsf):
         if self._params_df is not None:

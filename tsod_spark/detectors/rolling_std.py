@@ -32,15 +32,14 @@ class RollingStandardDeviationDetector(SparkDetector):
         self._max_std = max_std
         self._center = center
 
-    def fit(self, data):
+    def _fit_spec(self, tsf: TimeSeriesFrame):
         """max trailing rolling std of normal data (detectors.py:205-208)."""
-        tsf = as_tsf(data)
         std = rolling(F.stddev_samp, tsf.value, tsf.w(), self._window_size, center=False)
-        tsf = tsf.with_column(self.tmp("s"), std)
-        self._store_fit(tsf, {"max_std": F.max(F.col(self.tmp("s")))})
-        if self._params is not None:
-            self._max_std = self._params["max_std"]
-        return self
+        return {"s": std}, {"max_std": F.max(F.col(self.tmp("s")))}
+
+    def _adopt(self, params: dict) -> None:
+        super()._adopt(params)
+        self._max_std = params["max_std"]
 
     def _threshold(self):
         if self._params_df is not None:

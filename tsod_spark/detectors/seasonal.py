@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..expressions import as_pred
 from ..frame import TimeSeriesFrame
-from .base import SparkDetector
+from .base import SparkDetector, fit_fused
 
 
 def _seasonal_lit(values):
@@ -99,7 +99,7 @@ class SeasonalResidualDetector(SparkDetector):
             ]
         )
         # pass 1: the seasonal profile (one grouped aggregate)
-        self._store_fit(tsf, {"seasonal": seasonal})
+        fit_fused(tsf, [(self, ({}, {"seasonal": seasonal}))])
         # pass 2: residual threshold with the profile applied
         if self._params_df is not None:
             joined = tsf.with_df(

@@ -6,6 +6,13 @@ Estimator/Model idiom: a fitted detector is its class name + constructor
 params + learned scalars, serialized as JSON. Per-series params
 DataFrames are saved as parquet next to the JSON. Works with any
 filesystem path a driver can open.
+
+Layout: ``{path}`` holds the JSON; each distinct per-series params
+frame is one parquet sidecar ``{path}.params/{k}``, listed in the JSON
+with the leaves it serves. A fused CombinedDetector fit writes one
+sidecar for all its plain-aggregate leaves, and ``load`` reads it once.
+The earlier layout, one sidecar per leaf at ``{path}.params/{i}`` with
+``param_cols``, still loads.
 """
 
 from __future__ import annotations
@@ -104,50 +111,53 @@ def from_dict(d: dict) -> SparkDetector:
     return det
 
 
-def _walk(detector: SparkDetector):
-    """Yield leaf detectors in deterministic (depth-first) order."""
-    if type(detector).__name__ == "CombinedDetector":
-        for child in detector:
-            yield from _walk(child)
-    else:
-        yield detector
+def _leaves(detector: SparkDetector) -> list[SparkDetector]:
+    if isinstance(detector, CombinedDetector):
+        return list(detector.leaves())
+    return [detector]
 
 
 def save(detector: SparkDetector, path) -> None:
     """Save a detector for later use (cf. base.py:95-104).
 
-    Per-series fitted state (``_params_df``) is written as a parquet
-    sidecar per leaf detector at ``{path}.params/{i}``, with the
-    session-scoped ``__{uid}_`` column prefixes stripped so a reload
-    in a fresh session can re-prefix for its own uids. Scalar fitted
-    state rides in the JSON (fit copies it into the constructor
+    Per-series fitted state (``_params_df``) is written as one parquet
+    sidecar per distinct params frame at ``{path}.params/{k}``. A fused
+    CombinedDetector fit gives all its plain-aggregate leaves one frame,
+    so it writes one sidecar. The session-scoped ``__{uid}_`` column
+    prefixes become ``l{i}_`` (``i`` the leaf's depth-first index), so
+    a reload in a fresh session can re-prefix for its own uids. Scalar
+    fitted state rides in the JSON (fit copies it into the constructor
     attrs).
     """
     doc = {"spec": to_dict(detector), "sidecars": []}
-    for i, leaf in enumerate(_walk(detector)):
-        if leaf._params_df is None:
-            continue
-        prefix = f"__{leaf._uid}_"
-        pdf = leaf._params_df
-        renames = {
-            c: c[len(prefix):] for c in pdf.columns if c.startswith(prefix)
-        }
-        for old, new in renames.items():
-            pdf = pdf.withColumnRenamed(old, new)
-        sidecar = f"{path}.params/{i}"
-        pdf.coalesce(1).write.mode("overwrite").parquet(sidecar)
-        doc["sidecars"].append(
-            {"leaf": i, "path": sidecar, "param_cols": sorted(renames.values())}
-        )
+    leaves = _leaves(detector)
+    frames: dict[int, list[int]] = {}
+    for i, leaf in enumerate(leaves):
+        if leaf._params_df is not None:
+            frames.setdefault(id(leaf._params_df), []).append(i)
+    for k, idx in enumerate(frames.values()):
+        pdf = leaves[idx[0]]._params_df
+        cols = pdf.columns
+        owned, renames = {}, {}
+        for i in idx:
+            prefix = f"__{leaves[i]._uid}_"
+            names = [c[len(prefix):] for c in cols if c.startswith(prefix)]
+            owned[str(i)] = sorted(names)
+            renames.update({prefix + n: f"l{i}_{n}" for n in names})
+        sidecar = f"{path}.params/{k}"
+        pdf.withColumnsRenamed(renames).coalesce(1).write.mode("overwrite").parquet(sidecar)
+        doc["sidecars"].append({"path": sidecar, "leaves": owned})
     Path(path).write_text(json.dumps(doc, indent=2))
 
 
 def load(path, spark=None) -> SparkDetector:
     """Load a saved detector (cf. base.py:13-22).
 
-    Sidecar parquet params are re-read lazily and re-prefixed for the
-    fresh instance's uids; pass ``spark`` explicitly when no session
-    is active.
+    Each sidecar is read once, lazily, and re-prefixed for the fresh
+    instances' uids; leaves saved from one fused fit share the frame
+    again. Files in the earlier one-sidecar-per-leaf layout (entries
+    ``{"leaf": i, "param_cols": [...]}`` with unprefixed columns) load
+    too. Pass ``spark`` explicitly when no session is active.
     """
     doc = json.loads(Path(path).read_text())
     if "spec" not in doc:  # pre-sidecar format
@@ -162,13 +172,24 @@ def load(path, spark=None) -> SparkDetector:
                 raise RuntimeError(
                     "loading per-series fitted params needs a SparkSession"
                 )
-        leaves = list(_walk(detector))
+        leaves = _leaves(detector)
         for sc in doc["sidecars"]:
-            leaf = leaves[sc["leaf"]]
-            pdf = spark.read.parquet(sc["path"])
-            for name in sc["param_cols"]:
-                pdf = pdf.withColumnRenamed(name, leaf.tmp(name))
-            leaf._params_df = pdf
+            if "leaf" in sc:  # one sidecar per leaf
+                owned = {sc["leaf"]: {n: n for n in sc["param_cols"]}}
+            else:
+                owned = {
+                    int(i): {f"l{i}_{n}": n for n in names}
+                    for i, names in sc["leaves"].items()
+                }
+            pdf = spark.read.parquet(sc["path"]).withColumnsRenamed(
+                {
+                    saved: leaves[i].tmp(name)
+                    for i, cols in owned.items()
+                    for saved, name in cols.items()
+                }
+            )
+            for i in owned:
+                leaves[i]._params_df = pdf
     return detector
 
 

@@ -65,6 +65,8 @@ CHANGED: dict[str, int] = {
     ), 15),
     # text_stats now rounds quality_score like its DuckDB oracle
     "doc_stats": 16,
+    # HampelDetector sorts each window array once (sort_array columns)
+    "ts_hampel": 16,
 }
 
 

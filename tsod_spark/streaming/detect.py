@@ -285,17 +285,22 @@ def _plan(detector):
         plans = [_plan(d) for d in detector._detectors]
         lookback = max(p[1] for p in plans)
         lookahead = max(p[2] for p in plans)
+        # the closures ship to the Python workers: keep the params
+        # DataFrames (driver-only handles) out of what they capture
+        kerns = [p[0] for p in plans]
+        makers = [p[3] for p in plans]
 
-        def combined_kernel(ts, value, offset, resolved=None, plans=plans):
+        def combined_kernel(ts, value, offset, resolved=None):
             out = np.zeros(len(value), dtype=bool)
-            for (kern, _, _, mk, _), kw in zip(plans, resolved):
+            for kern, kw in zip(kerns, resolved):
                 out |= kern(ts, value, offset, **kw)
             return out
 
         def make_kwargs(row):
-            return {"resolved": [p[3](row) for p in plans]}
+            return {"resolved": [mk(row) for mk in makers]}
 
-        params_dfs = [df for p in plans if p[4] for df in p[4]] or None
+        # leaves of one fused fit share a params frame: join it once
+        params_dfs = list({id(df): df for p in plans if p[4] for df in p[4]}.values()) or None
         return combined_kernel, lookback, lookahead, make_kwargs, params_dfs
     raise NotImplementedError(
         f"streaming not implemented for {type(detector).__name__}; "
@@ -357,11 +362,12 @@ def stream_detect(
     Returns a streaming DataFrame ``(*series, ts, value, is_anomaly)``
     in update output mode.
 
-    Per-series fitted detectors work: each leaf's small params
-    DataFrame is broadcast-joined onto the stream (stream-static left
-    join — no stream shuffle beyond the keyed grouping) and the kernel
-    thresholds resolve per key inside the state operator; keys absent
-    from the fit fall back to the constructor scalars.
+    Per-series fitted detectors work: each distinct small params
+    DataFrame (a fused CombinedDetector fit has one) is broadcast-joined
+    onto the stream (stream-static left join — no stream shuffle beyond
+    the keyed grouping) and the kernel thresholds resolve per key
+    inside the state operator; keys absent from the fit fall back to
+    the constructor scalars.
 
     ``idle_timeout`` (e.g. ``"1 hour"``) evicts the state of series
     that stop sending (the :mod:`~tsod_spark.streaming._fold`

@@ -74,10 +74,38 @@ def gradient_kernel(ts, value, offset, max_gradient, direction="both"):
     return out.fillna(False).to_numpy(dtype=bool)
 
 
+def rolling_std(value, window_size, center):
+    """``value.rolling(window_size, center=center).std()`` computed the
+    way the batch plan's ``stddev_samp`` over a sliding frame is: each
+    full window re-aggregated from its first row with Spark's Welford
+    update (CentralMomentAgg). pandas' running add/remove sum rounds
+    differently in the last bits, which flips a row whose std equals a
+    fitted max_std (the max of these same windows). A window with a NaN
+    stays NaN, like the batch plan's min_periods guard."""
+    x = value.to_numpy(dtype=float)
+    w = window_size
+    out = np.full(len(x), np.nan)
+    if len(x) < w:
+        return out
+    win = np.lib.stride_tricks.sliding_window_view(x, w)
+    avg = np.zeros(len(win))
+    m2 = np.zeros(len(win))
+    for j in range(w):
+        delta = win[:, j] - avg
+        delta_n = delta / (j + 1)
+        avg = avg + delta_n
+        m2 = m2 + delta * (delta - delta_n)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        std = np.sqrt(m2 / (w - 1))
+    start = w // 2 if center else w - 1  # row of each window's first label
+    out[start : start + len(win)] = std
+    return out
+
+
 def rolling_std_kernel(ts, value, offset, window_size, max_std, center=True):
     # /root/reference/tsod/detectors.py:210-216 (min_periods = window)
-    std = value.rolling(window_size, center=center).std()
-    out = (std > max_std).fillna(False).to_numpy(dtype=bool)
+    with np.errstate(invalid="ignore"):
+        out = rolling_std(value, window_size, center) > max_std
     if offset == 0 and len(out):
         out[0] = False  # anomalies[0] = False, detectors.py:215
     return out
